@@ -3581,6 +3581,23 @@ def _jl_sign_sql(i: str, j: str) -> str:
     )
 
 
+def _jl_sign_rows(start: int, stop: int):
+    """Rows ``start..stop-1`` of the ±1 JL sign matrix (input dim x JL_K),
+    from the integer coin in exact Python arithmetic — the same rule as
+    :func:`_jl_sign_sql`."""
+    import numpy as np
+
+    from projet_pipeline_bigdata_org_spark.functions import hashing as H
+
+    return np.array(
+        [
+            [1 if H.hash_coin_int(i * JL_K + j) % 2 == 0 else -1 for j in range(JL_K)]
+            for i in range(start, stop)
+        ],
+        dtype=np.int64,
+    ).reshape(-1, JL_K)
+
+
 def _jl_sums_np():
     """Vectorized JL signed sums: one (batch × dim) @ (dim × JL_K) int64
     matmul per Arrow batch (guide §4.2 — the lsh_buckets_np pattern).
@@ -3593,26 +3610,30 @@ def _jl_sums_np():
     matmul. Bit-exact by construction: inputs are the JVM-quantized
     BIGINT millionths (quantization stays in Spark so ROUND semantics
     cannot drift), int64 sums of int64 products are exact and
-    order-independent. Ragged rows (non-EMBEDDING_DIM vectors) fall back
-    to per-row dots — same arithmetic."""
+    order-independent. Ragged or NULL-bearing batches fall back to
+    per-row dots — same arithmetic; a NULL embedding gives NULL, and a
+    vector longer than EMBEDDING_DIM extends the sign rows by the same
+    coin rule."""
     import numpy as np
     import pandas as pd
 
-    from projet_pipeline_bigdata_org_spark.functions import hashing as H
+    sign = _jl_sign_rows(0, EMBEDDING_DIM)
 
-    sign = np.empty((EMBEDDING_DIM, JL_K), dtype=np.int64)
-    for i in range(EMBEDDING_DIM):
-        for j in range(JL_K):
-            sign[i, j] = 1 if H.hash_coin_int(i * JL_K + j) % 2 == 0 else -1
+    def _signs(n: int):
+        nonlocal sign
+        if n > len(sign):
+            sign = np.vstack([sign, _jl_sign_rows(len(sign), n)])
+        return sign[:n]
 
     def _sums(q):
         rows = q.to_numpy()
         try:
             m = np.vstack(rows).astype(np.int64, copy=False)
-            out = m @ sign[: m.shape[1]]
-        except ValueError:  # ragged batch: per-row exact dots
+            out = m @ _signs(m.shape[1])
+        except (ValueError, TypeError):  # ragged batch or NULL rows
             out = [
-                np.asarray(r, dtype=np.int64) @ sign[: len(r)] for r in rows
+                None if r is None else np.asarray(r, dtype=np.int64) @ _signs(len(r))
+                for r in rows
             ]
         return pd.Series(list(out))
 

@@ -2086,7 +2086,8 @@ def _bpe_round_ctes(rounds: int, p: str = "", wordpiece: bool = False) -> list[s
     count(pair)/(count(left)*count(right)) — quantized to the exact
     integer (c * WP_SCORE_SCALE) // (lc * rc) so no float boundary can
     flip the argmax between engines — and a merge concatenates with the
-    right symbol's '##' continuation prefix stripped. The run-parity
+    right symbol's '##' continuation prefix stripped (a bare '##' right
+    symbol is never selected, as in the Spark twin). The run-parity
     merge application is character-for-character the BPE one."""
     parts = []
     # a WordPiece merge strips the right symbol's '##' continuation prefix
@@ -2103,7 +2104,8 @@ def _bpe_round_ctes(rounds: int, p: str = "", wordpiece: bool = False) -> list[s
       FROM (SELECT pc.ls, pc.rs, pc.c, l.c AS lc, r2.c AS rc
             FROM {p}pc{r} pc
             JOIN {p}sc{r} l ON l.sym = pc.ls
-            JOIN {p}sc{r} r2 ON r2.sym = pc.rs)
+            JOIN {p}sc{r} r2 ON r2.sym = pc.rs
+            WHERE LENGTH(pc.rs) > 2)
       ORDER BY score_q DESC, ls, rs LIMIT 1
     )"""
         else:
@@ -2264,7 +2266,10 @@ def bpe_merge_round(
             )
         )
         best = (
-            scored.orderBy(F.desc("score_q"), "ls", "rs")
+            # a bare '##' right symbol would merge to bl itself and let
+            # the fold chain-merge: keep "merged is bl||<nonempty>" true
+            scored.filter(F.length("rs") > 2)
+            .orderBy(F.desc("score_q"), "ls", "rs")
             .limit(1)
             .select(
                 F.col("ls").alias("bl"),

@@ -8,6 +8,8 @@ comparison and local benchmarking need:
 - AQE on (runtime re-plan, skew-join handling, partition coalescing)
 - shuffle partitions sized to local cores, not the 200 default
 - Arrow enabled for every pandas_udf / toPandas exchange
+- DataFrame origin capture off (per-call Python stack collection; see
+  ``get_spark`` for what that drops and how to turn it back on)
 
 At cluster scale the same factory applies; only master/memory change.
 External drivers may build their own SparkSession; ``ensure_runtime_confs``
@@ -45,6 +47,10 @@ def derive_shuffle_partitions(input_bytes: int, total_cores: int) -> int:
     by_size = -(-int(input_bytes) // SHUFFLE_TARGET_PARTITION_BYTES)
     return int(min(max(by_size, 2 * int(total_cores)), 1 << 17))
 
+#: static SQL conf (settable only at session build, so not a runtime conf
+#: below): whether PySpark records each DataFrame API call's Python call site
+DATAFRAME_DEBUGGING_CONF = "spark.python.sql.dataFrameDebugging.enabled"
+
 #: correctness-required on ANY session running engine queries: wrong values
 #: crash events reads (parquet nanos) or silently shift timestamp results.
 REQUIRED_CONFS = {
@@ -55,32 +61,37 @@ REQUIRED_CONFS = {
 }
 
 
+def _shuffle_partitions() -> str:
+    """Scale-adaptive: explicit SPARK_GRAFT_SHUFFLE_PARTITIONS wins; else,
+    when the deployment declares its input scale via SPARK_GRAFT_INPUT_BYTES
+    (+ optionally SPARK_GRAFT_TOTAL_CORES), the guide §2.2 size rule applies
+    (derive_shuffle_partitions); else the local default. The benchmark sets
+    neither, so its runs stay comparable round over round."""
+    explicit = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    if explicit is not None:
+        return explicit
+    raw = os.environ.get("SPARK_GRAFT_INPUT_BYTES", "")
+    if raw.isascii() and raw.isdigit():
+        cores = os.environ.get(
+            "SPARK_GRAFT_TOTAL_CORES",
+            os.environ.get("SPARK_GRAFT_CPUS", "32").strip("*") or "32",
+        )
+        return str(derive_shuffle_partitions(int(raw), int(cores)))
+    if raw:
+        # a misread scale must not quietly size a 100 TB job like a laptop
+        log.warning(
+            "SPARK_GRAFT_INPUT_BYTES=%r is not a plain byte count (digits "
+            "only); ignoring it, spark.sql.shuffle.partitions stays %d",
+            raw, DEFAULT_SHUFFLE_PARTITIONS,
+        )
+    return str(DEFAULT_SHUFFLE_PARTITIONS)
+
+
 def _perf_confs() -> dict[str, str]:
     """Performance confs (safe defaults for engine workloads; read env at
     call time so deployments can steer them)."""
     return {
-        # scale-adaptive: explicit SPARK_GRAFT_SHUFFLE_PARTITIONS wins;
-        # else, when the deployment declares its input scale via
-        # SPARK_GRAFT_INPUT_BYTES (+ optionally SPARK_GRAFT_TOTAL_CORES),
-        # the guide §2.2 size rule applies (derive_shuffle_partitions);
-        # else the local default. The driver's bench sets neither, so its
-        # runs stay comparable round over round.
-        "spark.sql.shuffle.partitions": os.environ.get(
-            "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-            str(
-                derive_shuffle_partitions(
-                    int(os.environ["SPARK_GRAFT_INPUT_BYTES"]),
-                    int(
-                        os.environ.get(
-                            "SPARK_GRAFT_TOTAL_CORES",
-                            os.environ.get("SPARK_GRAFT_CPUS", "32").strip("*") or "32",
-                        )
-                    ),
-                )
-            )
-            if os.environ.get("SPARK_GRAFT_INPUT_BYTES", "").isdigit()
-            else str(DEFAULT_SHUFFLE_PARTITIONS),
-        ),
+        "spark.sql.shuffle.partitions": _shuffle_partitions(),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -140,6 +151,16 @@ def get_spark(
     """Build (or get) the SparkSession.
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS, else all local cores.
+
+    DataFrame origin capture (:data:`DATAFRAME_DEBUGGING_CONF`) is off:
+    with it on, PySpark collects the caller's stack and sends it over
+    Py4J on every Column / ``functions`` call, which was about half to two
+    thirds of the Py4J commands a registered query builder sent. The
+    cost is that a runtime error's DataFrame context no longer names the
+    Python call site. To get it back, pass
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+    when the session is first built: it is a static conf, and PySpark
+    reads it once per process.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
@@ -151,6 +172,7 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
+        .config(DATAFRAME_DEBUGGING_CONF, "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

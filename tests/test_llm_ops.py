@@ -4702,6 +4702,38 @@ def test_jaccard_prefix_complete_vs_bruteforce(spark, sf_dir):
     assert expected, "fixture must make the join non-vacuous"
 
 
+def test_wordpiece_merge_never_selects_bare_continuation_marker(spark):
+    """A bare '##' right symbol would merge to its left symbol unchanged
+    and let the fold chain-merge; both twins must skip it even when its
+    likelihood score ranks first. Crafted vocabulary: (q, ##) scores
+    c/(lc*rc) = 1/1 and outranks (b, ##c) at 2/(2*2)."""
+    import duckdb
+
+    from projet_pipeline_bigdata_org_spark.operators.textops import (
+        _bpe_round_ctes,
+        bpe_merge_round,
+    )
+
+    vocab = spark.createDataFrame(
+        [("qx", 1, ["q", "##"]), ("bc", 2, ["b", "##c"])],
+        "word string, freq long, syms array<string>",
+    )
+    rebuilt, summary = bpe_merge_round(vocab, 1, wordpiece=True)
+    (row,) = summary.collect()
+    assert (row.left_sym, row.right_sym, row.pair_freq) == ("b", "##c", 2)
+    assert {r.word: list(r.syms) for r in rebuilt.collect()} == {
+        "qx": ["q", "##"],
+        "bc": ["bc"],
+    }
+    sql = (
+        "WITH tv0 AS (SELECT * FROM (VALUES ('qx', 1, 'q ##'), ('bc', 2, 'b ##c'))"
+        " t(word, freq, seq)), "
+        + ", ".join(_bpe_round_ctes(1, p="t", wordpiece=True))
+        + " SELECT left_sym, right_sym, pair_freq, vocab_symbols_after FROM tm1"
+    )
+    assert duckdb.connect().execute(sql).fetchall() == [("b", "##c", 2, 3)]
+
+
 def test_wordpiece_training_and_maxmatch_match_python_replay(spark, sf_dir):
     """Independent third check of the WordPiece pair: replay the whole
     trainer (likelihood-score argmax with the exact quantized-integer
@@ -4920,6 +4952,40 @@ def test_jl_projection_replays_in_numpy_and_preserves_distances(spark, sf_dir):
     # (measured ~0.38 here); the positive band pins the direction, the
     # bit-level replay above is the actual correctness gate
     assert corr > 0.2, f"JL distance correlation too low: {corr:.2f}"
+
+
+def test_jl_sums_fallback_handles_null_and_long_vectors(spark):
+    """The batch kernel of _jl_sums_np on batches its matmul fast path
+    cannot take: a NULL embedding gives NULL, and a vector longer than
+    EMBEDDING_DIM extends the sign rows by the same coin rule. Every row
+    must equal its exact per-row integer dot."""
+    import numpy as np
+
+    from projet_pipeline_bigdata_org_spark.functions.hashing import KNUTH, PRIME32
+    from projet_pipeline_bigdata_org_spark.operators.similarity import (
+        EMBEDDING_DIM,
+        JL_K,
+        _jl_sums_np,
+    )
+
+    def dot(v):
+        return [
+            sum(
+                x * (1 if (i * JL_K + j) % PRIME32 * KNUTH % PRIME32 % 2 == 0 else -1)
+                for i, x in enumerate(v)
+            )
+            for j in range(JL_K)
+        ]
+
+    rng = np.random.default_rng(7)
+    full = rng.integers(-10**6, 10**6, EMBEDDING_DIM)
+    longer = rng.integers(-10**6, 10**6, EMBEDDING_DIM + 9)
+    kernel = _jl_sums_np().func  # the function the pandas UDF runs per batch
+    for batch in ([full, None, longer], [None, None], [longer, longer], [longer, None]):
+        got = kernel(pd.Series(batch, dtype=object))
+        assert [None if g is None else [int(x) for x in g] for g in got] == [
+            None if v is None else dot(v.tolist()) for v in batch
+        ]
 
 
 def test_ann_ivf_incremental_equals_one_shot(spark, sf_dir):

@@ -1,16 +1,24 @@
-"""Round-18 optimization knobs: scale-safety behaviors that plan dumps
-can't pin — the size-derived shuffle-partition rule, the bounded
-spread_input guard, the scan-parts cache cap, the scoped-pin release
-discipline, and the DISK_ONLY storage level of the corpus-sized pins.
+"""Optimization knobs: scale-safety behaviors that plan dumps can't pin —
+the size-derived shuffle-partition rule, the bounded spread_input guard,
+the scan-parts cache cap, the scoped-pin release discipline, the DISK_ONLY
+storage level of the corpus-sized pins, and the per-query driver overhead
+cuts (origin capture off, memoized table schemas).
 """
 
 from __future__ import annotations
 
+import logging
+import time
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark import StorageLevel
 
 from projet_pipeline_bigdata_org_spark import catalog
 from projet_pipeline_bigdata_org_spark.operators import dedup
 from projet_pipeline_bigdata_org_spark.session import (
+    DATAFRAME_DEBUGGING_CONF,
     DEFAULT_SHUFFLE_PARTITIONS,
     derive_shuffle_partitions,
 )
@@ -54,6 +62,26 @@ class TestDeriveShufflePartitions:
         from projet_pipeline_bigdata_org_spark.session import _perf_confs
 
         assert _perf_confs()["spark.sql.shuffle.partitions"] == "777"
+
+    @pytest.mark.parametrize("raw", ["1e12", "100TB", "1_000000000000"])
+    def test_malformed_input_bytes_warns(self, monkeypatch, caplog, raw):
+        monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
+        monkeypatch.setenv("SPARK_GRAFT_INPUT_BYTES", raw)
+        from projet_pipeline_bigdata_org_spark.session import _perf_confs
+
+        with caplog.at_level(logging.WARNING, logger="projet_pipeline_bigdata_org_spark.session"):
+            parts = _perf_confs()["spark.sql.shuffle.partitions"]
+        assert parts == str(DEFAULT_SHUFFLE_PARTITIONS)
+        assert f"SPARK_GRAFT_INPUT_BYTES={raw!r}" in caplog.text
+
+    def test_plain_input_bytes_does_not_warn(self, monkeypatch, caplog):
+        monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
+        monkeypatch.setenv("SPARK_GRAFT_INPUT_BYTES", str(1 << 40))
+        from projet_pipeline_bigdata_org_spark.session import _perf_confs
+
+        with caplog.at_level(logging.WARNING, logger="projet_pipeline_bigdata_org_spark.session"):
+            _perf_confs()
+        assert "SPARK_GRAFT_INPUT_BYTES" not in caplog.text
 
 
 class TestSpreadInputGuard:
@@ -118,3 +146,73 @@ class TestScopedPins:
         assert '"jacpref_ex"' in jac and "big=True" in jac
         att = inspect.getsource(textops.text_decontaminate_attrib)
         assert '"decontam_attrib_t"' in att and "big=True" in att
+
+
+def _jobs_in_group(sc, group: str, marker: str) -> list[int]:
+    """Job ids Spark recorded under ``group``. The status tracker is fed
+    by the listener bus, so a marker job is run under ``marker`` after the
+    work and awaited first: the bus is FIFO, so once the marker shows, every
+    job the work started shows too."""
+    sc.setJobGroup(marker, "flush the listener bus")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never reached the status tracker"
+        time.sleep(0.05)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestDriverOverhead:
+    def test_get_spark_turns_origin_capture_off(self, spark):
+        assert spark.conf.get(DATAFRAME_DEBUGGING_CONF) == "false"
+
+    def test_second_load_of_unchanged_table_starts_no_job(self, spark, tmp_path):
+        sc = spark.sparkContext
+        path = catalog.table_path(str(tmp_path), "nation")
+        pq.write_table(pa.table({"n_nationkey": pa.array([0, 1], pa.int32())}), path)
+        try:
+            # positive control: the first load infers the schema in a job
+            sc.setJobGroup("memo-first-load", "first load")
+            catalog.load(spark, str(tmp_path), "nation")
+            sc.setJobGroup("memo-second-load", "second load")
+            df = catalog.load(spark, str(tmp_path), "nation")
+        finally:
+            sc._jsc.clearJobGroup()
+        assert _jobs_in_group(sc, "memo-first-load", "memo-marker-1")
+        assert _jobs_in_group(sc, "memo-second-load", "memo-marker-2") == []
+        assert [r.n_nationkey for r in df.orderBy("n_nationkey").collect()] == [0, 1]
+
+    def test_rewritten_file_shows_new_column(self, spark, tmp_path):
+        path = catalog.table_path(str(tmp_path), "region")
+        pq.write_table(
+            pa.table({"r_regionkey": pa.array([0], pa.int32()), "r_name": ["AFRICA"]}), path
+        )
+        assert catalog.load(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+        pq.write_table(
+            pa.table({
+                "r_regionkey": pa.array([0, 1], pa.int32()),
+                "r_name": ["AFRICA", "ASIA"],
+                "r_comment": ["a", "b"],
+            }),
+            path,
+        )
+        df = catalog.load(spark, str(tmp_path), "region")
+        assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+        assert sorted(r.r_comment for r in df.collect()) == ["a", "b"]
+
+    def test_schema_memo_is_bounded(self, spark, sf_dir):
+        saved = dict(catalog._SCHEMA_CACHE)
+        try:
+            catalog._SCHEMA_CACHE.clear()
+            for i in range(catalog._SCHEMA_CACHE_MAX):
+                catalog._SCHEMA_CACHE[("app", f"path{i}", 0, 0, 0)] = None
+            # a novel table's insert must evict, not grow unbounded
+            catalog.load(spark, sf_dir, "nation")
+            assert len(catalog._SCHEMA_CACHE) == catalog._SCHEMA_CACHE_MAX
+            assert any(k[1] == catalog.table_path(sf_dir, "nation") for k in catalog._SCHEMA_CACHE)
+        finally:
+            catalog._SCHEMA_CACHE.clear()
+            catalog._SCHEMA_CACHE.update(saved)
