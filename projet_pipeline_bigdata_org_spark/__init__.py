@@ -14,6 +14,22 @@ Layout
 - ``sources``    : batch/streaming readers and failover sinks
 - ``streaming``  : event-time windows, watermarks, sessionization
 - ``ml``         : SparkML feature/virality pipeline (reference M1-M10)
+
+Importing the package in a PySpark Python worker also installs
+``_worker_zipimport``: PySpark's worker calls
+``importlib.invalidate_caches()`` at the start of every task
+(``worker_util.setup_spark_files``), and on CPython 3.11/3.12 that makes
+each of the worker's ~16 ``zipimporter``s for ``pyspark.zip`` re-read the
+archive's whole directory (``zipimport.zipimporter.invalidate_caches``),
+135-250 ms per task. The hook re-reads an archive only when its stat
+changed. Every engine UDF imports the package when the worker unpickles
+it, so from a worker's second task on the cost is gone. The hook is inert
+in the driver (no ``PYTHON_WORKER_FACTORY_SECRET``) and on 3.13+, whose
+``zipimport`` reads lazily.
 """
 
+from projet_pipeline_bigdata_org_spark import _worker_zipimport
+
 __version__ = "0.1.0"
+
+_worker_zipimport.install()

@@ -3610,14 +3610,18 @@ def _jl_sums_np():
     matmul. Bit-exact by construction: inputs are the JVM-quantized
     BIGINT millionths (quantization stays in Spark so ROUND semantics
     cannot drift), int64 sums of int64 products are exact and
-    order-independent. Ragged or NULL-bearing batches fall back to
-    per-row dots — same arithmetic; a NULL embedding gives NULL, and a
-    vector longer than EMBEDDING_DIM extends the sign rows by the same
-    coin rule."""
+    order-independent. Ragged batches, NULL rows and rows with NULL
+    elements fall back to per-row dots — same arithmetic; a NULL
+    embedding gives NULL, a vector longer than EMBEDDING_DIM extends the
+    sign rows by the same coin rule, and NULL elements are skipped as the
+    oracle's LIST_SUM skips them, so an empty or all-NULL vector gives
+    JL_K NULL sums. Arrow hands a batch with any NULL element over as
+    float64 with NaN, which an int64 cast would turn into -2^63."""
     import numpy as np
     import pandas as pd
 
     sign = _jl_sign_rows(0, EMBEDDING_DIM)
+    no_sums = [None] * JL_K
 
     def _signs(n: int):
         nonlocal sign
@@ -3625,17 +3629,33 @@ def _jl_sums_np():
             sign = np.vstack([sign, _jl_sign_rows(len(sign), n)])
         return sign[:n]
 
+    def _row(r):
+        if r is None:
+            return None
+        v = np.asarray(r)
+        if v.dtype.kind in "iu":
+            terms = np.ones(len(v), dtype=bool)
+        else:  # NULL elements: NaN from Arrow, None from a Python list
+            v = v.astype(np.float64)
+            terms = ~np.isnan(v)
+        if not terms.any():
+            return no_sums
+        return v[terms].astype(np.int64) @ _signs(len(v))[terms]
+
     def _sums(q):
         rows = q.to_numpy()
         try:
-            m = np.vstack(rows).astype(np.int64, copy=False)
-            out = m @ _signs(m.shape[1])
+            m = np.vstack(rows)
         except (ValueError, TypeError):  # ragged batch or NULL rows
-            out = [
-                None if r is None else np.asarray(r, dtype=np.int64) @ _signs(len(r))
-                for r in rows
-            ]
-        return pd.Series(list(out))
+            return pd.Series([_row(r) for r in rows])
+        # rows the matmul takes: non-empty with no NULL element
+        if m.dtype.kind == "f":
+            whole = ~np.isnan(m).any(axis=1)
+        else:
+            whole = np.full(len(m), m.dtype.kind in "iu")
+        whole &= m.shape[1] > 0
+        sums = iter(m[whole].astype(np.int64) @ _signs(m.shape[1]))
+        return pd.Series([next(sums) if w else _row(r) for r, w in zip(rows, whole)])
 
     _sums.__annotations__ = {"q": pd.Series, "return": pd.Series}
     return F.pandas_udf(_sums, "array<long>")

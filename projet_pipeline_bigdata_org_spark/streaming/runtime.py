@@ -174,8 +174,12 @@ def idempotent_parquet_batch_writer(path: str) -> BatchWriter:
 @dataclass
 class FailoverBatchSink:
     """foreachBatch sink with primary→fallback failover (reference T4/S5/S6,
-    engine.py:169-219), minus its anti-patterns: no per-batch count() job,
-    no toPandas() driver collect — the fallback is a distributed write too.
+    engine.py:169-219), minus its anti-patterns: rows are counted by
+    observe() on the write job instead of a separate count() job, and
+    there is no toPandas() driver collect — the fallback is a distributed
+    write too. The empty-batch guard still runs one short isEmpty() job
+    per batch; an empty batch reaches neither writer and counts as
+    ``stats["empty"]``.
 
     A transform callable runs inside the micro-batch (the reference's
     _transform_batch slot). Poison batches are counted and dropped after

@@ -15,6 +15,7 @@ from projet_pipeline_bigdata_org_spark.streaming.runtime import (
     FailoverBatchSink,
     dedup_within_watermark,
     file_stream,
+    idempotent_parquet_batch_writer,
     json_batch_writer,
     parquet_batch_writer,
     start_foreach_batch,
@@ -207,6 +208,30 @@ def test_failover_sink_drops_poison_batch(spark, tmp_path):
     q.processAllAvailable()  # must NOT raise: poison batch is dropped
     q.stop()
     assert sink.stats["dropped"] == 1
+
+
+def test_failover_sink_skips_empty_batch(spark, tmp_path):
+    """The empty-batch guard: an empty micro-batch reaches neither writer,
+    is counted as empty, and leaves no epoch partition behind."""
+    out_dir = tmp_path / "primary"
+    calls = []
+
+    def recording(writer, name):
+        def write(df, epoch_id):
+            calls.append(name)
+            writer(df, epoch_id)
+
+        return write
+
+    sink = FailoverBatchSink(
+        primary=recording(idempotent_parquet_batch_writer(str(out_dir)), "primary"),
+        fallback=recording(json_batch_writer(str(tmp_path / "fallback")), "fallback"),
+    )
+    sink(spark.createDataFrame([], EVENTS_SCHEMA), 0)
+    assert calls == []
+    assert sink.stats["batches"] == 1 and sink.stats["empty"] == 1
+    assert sink.stats["failover"] == 0 and sink.stats["dropped"] == 0
+    assert not list(tmp_path.glob("**/epoch=*"))
 
 
 def test_session_window_streaming_matches_batch(spark, tmp_path):
