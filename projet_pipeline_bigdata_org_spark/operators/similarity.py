@@ -3610,10 +3610,10 @@ def _jl_sums_np():
     matmul. Bit-exact by construction: inputs are the JVM-quantized
     BIGINT millionths (quantization stays in Spark so ROUND semantics
     cannot drift), int64 sums of int64 products are exact and
-    order-independent. Ragged batches, NULL rows and rows with NULL
-    elements fall back to per-row dots — same arithmetic; a NULL
-    embedding gives NULL, a vector longer than EMBEDDING_DIM extends the
-    sign rows by the same coin rule, and NULL elements are skipped as the
+    order-independent. A NULL embedding gives NULL. Ragged batches and
+    rows with NULL elements fall back to per-row dots — same arithmetic;
+    a vector longer than EMBEDDING_DIM extends the sign rows by the same
+    coin rule, and NULL elements are skipped as the
     oracle's LIST_SUM skips them, so an empty or all-NULL vector gives
     JL_K NULL sums. Arrow hands a batch with any NULL element over as
     float64 with NaN, which an int64 cast would turn into -2^63."""
@@ -3644,9 +3644,10 @@ def _jl_sums_np():
 
     def _sums(q):
         rows = q.to_numpy()
+        vecs = [r for r in rows if r is not None]  # NULL rows stay NULL
         try:
-            m = np.vstack(rows)
-        except (ValueError, TypeError):  # ragged batch or NULL rows
+            m = np.vstack(vecs)
+        except (ValueError, TypeError):  # ragged or all-NULL batch
             return pd.Series([_row(r) for r in rows])
         # rows the matmul takes: non-empty with no NULL element
         if m.dtype.kind == "f":
@@ -3655,7 +3656,10 @@ def _jl_sums_np():
             whole = np.full(len(m), m.dtype.kind in "iu")
         whole &= m.shape[1] > 0
         sums = iter(m[whole].astype(np.int64) @ _signs(m.shape[1]))
-        return pd.Series([next(sums) if w else _row(r) for r, w in zip(rows, whole)])
+        takes = iter(whole)
+        return pd.Series(
+            [None if r is None else next(sums) if next(takes) else _row(r) for r in rows]
+        )
 
     _sums.__annotations__ = {"q": pd.Series, "return": pd.Series}
     return F.pandas_udf(_sums, "array<long>")
@@ -3709,8 +3713,13 @@ def embed_jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         lambda x: F.round(x.cast("double") * PW_XS, 0).cast("long"),
     )
+    # a NULL embedding's NULL sums explode to JL_K NULL rows, as the
+    # oracle's LIST_SUM over each output dim gives
+    sums = F.coalesce(
+        _jl_sums_np()(q), F.array_repeat(F.lit(None).cast("long"), JL_K)
+    )
     return e.select(
-        "vec_id", F.posexplode(_jl_sums_np()(q)).alias("out_dim", "proj_scaled")
+        "vec_id", F.posexplode(sums).alias("out_dim", "proj_scaled")
     ).select(
         "vec_id",
         F.col("out_dim").cast("long").alias("out_dim"),

@@ -4990,9 +4990,10 @@ def test_jl_sums_fallback_handles_null_and_long_vectors(spark):
 
 def test_jl_project_null_elements_match_oracle(spark, tmp_path):
     """embed_jl_project against its DuckDB oracle on embeddings with a NULL
-    element, all NULL elements, and no elements. Arrow hands such a batch
-    to the kernel as float64 with NaN; the oracle's LIST_SUM skips NULL
-    terms and sums nothing to NULL. Run once as one ragged batch (per-row
+    element, all NULL elements, no elements, and a NULL embedding. Arrow
+    hands such a batch to the kernel as float64 with NaN; the oracle's
+    LIST_SUM skips NULL terms and sums nothing to NULL, and a NULL
+    embedding still gives JL_K rows. Run once as one ragged batch (per-row
     path) and once with equal lengths (matmul path)."""
     import duckdb
     import pyarrow as pa
@@ -5003,8 +5004,8 @@ def test_jl_project_null_elements_match_oracle(spark, tmp_path):
 
     full = [float(i % 7 - 3) / 4 for i in range(EMBEDDING_DIM)]
     cases = {
-        "ragged": [[1.0] * 63 + [None], [None] * EMBEDDING_DIM, [], full],
-        "equal": [[1.0] * 63 + [None], [None] * EMBEDDING_DIM, full],
+        "ragged": [[1.0] * 63 + [None], [None] * EMBEDDING_DIM, [], full, None],
+        "equal": [[1.0] * 63 + [None], [None] * EMBEDDING_DIM, full, None],
     }
     spec = _Q["embed_jl_project"]
     for case, vecs in cases.items():
@@ -5027,7 +5028,7 @@ def test_jl_project_null_elements_match_oracle(spark, tmp_path):
         assert got == want, case
         # the cases pin NULL sums, not just rows that happen to agree
         null_sums = sum(r[2] == "␀" for r in want[1])  # columns sort to proj_scaled
-        assert null_sums == JL_K * (2 if case == "ragged" else 1), case
+        assert null_sums == JL_K * (3 if case == "ragged" else 2), case
 
 
 def test_ann_ivf_incremental_equals_one_shot(spark, sf_dir):

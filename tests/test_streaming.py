@@ -45,6 +45,12 @@ def _memory_query(df, name, mode="append"):
     )
 
 
+def _outcomes(sink):
+    """A sink's outcome counts: its stats without the call count, which a
+    replayed epoch must leave unchanged."""
+    return {k: v for k, v in sink.stats.items() if k != "batches"}
+
+
 def test_file_stream_windowed_counts(spark, tmp_path):
     src = str(tmp_path / "src")
     _mk_events(
@@ -591,12 +597,14 @@ def test_history_dedup_sink_cross_batch_and_replay(spark, tmp_path):
         }
 
     assert admitted() == want
+    before = _outcomes(sink)
     # replay both epochs, newest first (the worst case: epoch 0 replays
     # AFTER history already contains its shas under epoch=0) — the
     # strict `epoch < e` membership bound keeps both rewrites identical
     sink(b2, 1)
     sink(b1, 0)
     assert admitted() == want
+    assert _outcomes(sink) == before
     hist_rows = spark.read.parquet(hist)
     assert hist_rows.count() == 3  # one sha per admitted content, no dupes
 
@@ -680,12 +688,14 @@ def test_minhash_history_sink_rejects_near_dups_and_replays_identically(
 
     want = {base[0], novel[0]}
     assert admitted() == want
+    before = _outcomes(sink)
     # worst-order replay: epoch 0 replays AFTER history already holds its
     # own bands under epoch=0 — the strict `epoch < e` bound keeps the
     # rewrite identical (it cannot near-reject itself)
     sink(mk([near, novel]), 1)
     sink(mk([base]), 0)
     assert admitted() == want
+    assert _outcomes(sink) == before
     hist_ids = {
         r.doc_id
         for r in spark.read.parquet(f"{hist}/shingles").select("doc_id").collect()
@@ -908,10 +918,12 @@ def test_semdedup_history_sink_first_epoch_admits_and_replays_identically(
         )
 
     want = admitted()
+    before = _outcomes(sink)
     # replay both epochs in the worst order: partitions rewrite identically
     sink(e.filter(is_batch), 1)
     sink(e.filter(~is_batch), 0)
     assert admitted() == want
+    assert _outcomes(sink) == before
     # history points hold exactly the admitted ids
     hist_ids = {
         r.vec_id
@@ -952,9 +964,11 @@ def test_simhash_history_sink_rejects_near_dups_and_replays_identically(
 
     want = {base[0], novel[0]}
     assert admitted() == want
+    before = _outcomes(sink)
     sink(mk([near, novel]), 1)
     sink(mk([base]), 0)
     assert admitted() == want
+    assert _outcomes(sink) == before
     hist_ids = {
         r.doc_id
         for r in spark.read.parquet(f"{hist}/fingerprints").select("doc_id").collect()
@@ -1049,9 +1063,11 @@ def test_quality_gate_sink_matches_batch_classifier_and_replays(spark, sf_dir, t
         {r.doc_id for r in docs.select("doc_id").collect()} - expected_keep
     )
     assert all(r.margin < 0 for r in quarantined.collect())
-    # replay: identical rewrite, stats accumulate but data does not
+    before = _outcomes(sink)
+    # replay: identical rewrite of the data, and the stats stay as they were
     sink(batch, 0)
     assert {r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()} == expected_keep
+    assert _outcomes(sink) == before
 
 
 def test_history_scan_tolerates_uncommitted_store(spark, tmp_path):
@@ -1120,11 +1136,13 @@ def test_passage_history_sink_rejects_repeats_and_replays_identically(
         return {r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()}
 
     assert admitted() == {1, 3, 4}
+    before = _outcomes(sink)
     # worst-order replay: the strict epoch < e bound keeps both rewrites
     # identical (epoch 0 cannot reject itself against its own windows)
     sink(mk([rep, novel, short]), 1)
     sink(mk([base]), 0)
     assert admitted() == {1, 3, 4}
+    assert _outcomes(sink) == before
     # rejected doc's windows never entered history; short doc stored none
     hw = spark.read.parquet(f"{hist}/windows")
     assert hw.count() == hw.distinct().count()  # per-epoch stores are distinct
@@ -1251,11 +1269,13 @@ def test_boilerplate_history_sink_rejects_shared_footer_and_replays(
         return {r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()}
 
     assert admitted() == {1, 3, 4}
+    before = _outcomes(sink)
     # worst-order replay: the strict epoch < e bound keeps both rewrites
     # identical (epoch 0 cannot reject itself against its own lines)
     sink(mk([rep, novel, empty]), 1)
     sink(mk([base]), 0)
     assert admitted() == {1, 3, 4}
+    assert _outcomes(sink) == before
     hw = spark.read.parquet(f"{hist}/lines")
     assert hw.count() == hw.distinct().count()  # per-epoch stores distinct
     # epoch 1 stored only novel's 2 lines (rejected + empty stored none)
@@ -1384,12 +1404,14 @@ def test_anomaly_gate_sink_matches_batch_ewma_and_replays(spark, tmp_path):
     assert got == want
     assert sink.stats["flagged"] == len(want) and sink.stats["scored"] == 60
 
+    before = _outcomes(sink)
     # replay epoch 1: identical rewrite, no duplicate or drifted rows
     epoch_rows = [r for r in rows if 10 <= (r[1] - base).total_seconds() < 20]
     sink(spark.createDataFrame(epoch_rows, schema), 1)
     got2 = {r.event_id: (r.cents, r.ewma_num, r.ewma_den, r.n_prior)
             for r in spark.read.parquet(out).collect()}
     assert got2 == want
+    assert _outcomes(sink) == before
 
 
 def test_kmv_sketch_sink_merge_equals_batch_sketch_and_replays(spark, tmp_path):
