@@ -38,8 +38,6 @@ TABLES = (
 #: dimension tables small enough to broadcast at any realistic scale factor
 BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part"})
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -125,9 +123,8 @@ _SCAN_PARTS_CACHE_MAX = 256
 #: already carries more than this many splits is parallel enough that a
 #: full round-robin shuffle of every scanned row costs more than the
 #: residual task-count imbalance — e.g. a mid-size table with 16 splits
-#: on a 512-core cluster must NOT be re-shuffled wholesale. Env-steerable
-#: for deployments whose per-row compute is extreme.
-SPREAD_MAX_INPUT_SPLITS = int(os.environ.get("SPARK_GRAFT_SPREAD_MAX_SPLITS", "8"))
+#: on a 512-core cluster must NOT be re-shuffled wholesale.
+SPREAD_MAX_INPUT_SPLITS = 8
 
 
 def spread_input(df: DataFrame) -> DataFrame:
@@ -206,8 +203,8 @@ def stage_tables(
     literal silver layer) and served back as plain scans. Two properties
     the in-memory form can't give:
 
-    - robustness to ``spark.catalog.clearCache()`` — the bench sweep
-      (and any memory-pressure eviction) drops persisted DataFrames, so
+    - robustness to ``spark.catalog.clearCache()`` — a caller's clear
+      (or any memory-pressure eviction) drops persisted DataFrames, so
       an in-memory cached artifact silently degrades to a full lineage
       recompute; a parquet scan cannot degrade;
     - downstream plans read column-pruned, predicate-pushable scans

@@ -33,18 +33,19 @@ Backend = Callable[[Sequence[str]], list[str]]
 
 
 def stub_backend(texts: Sequence[str]) -> list[str]:
-    """Deterministic sentiment stub: label index = len(text) % 3.
+    """Deterministic sentiment stub: label index = len(text) % 3, with a
+    NULL text counted as empty (so labelled ``neutral``).
 
     SQL twin (oracle):
-        CASE (LENGTH(text) % 3) WHEN 0 THEN 'neutral'
-                                WHEN 1 THEN 'positive'
-                                ELSE 'negative' END
+        CASE (LENGTH(COALESCE(text, '')) % 3) WHEN 0 THEN 'neutral'
+                                              WHEN 1 THEN 'positive'
+                                              ELSE 'negative' END
     """
     return [LABELS[len(t or "") % 3] for t in texts]
 
 
 SQL_STUB_SENTIMENT = (
-    "CASE (LENGTH({c}) % 3) WHEN 0 THEN 'neutral' "
+    "CASE (LENGTH(COALESCE({c}, '')) % 3) WHEN 0 THEN 'neutral' "
     "WHEN 1 THEN 'positive' ELSE 'negative' END"
 )
 

@@ -587,9 +587,8 @@ def _persist_scoped(scope: str, df: DataFrame, big: bool = False) -> DataFrame:
 
     A long-lived session that runs many different operators can call
     :func:`release_scoped_pins` after consuming a query's result to
-    drop every scoped pin at once (the bench does this between timed
-    queries); within-query sharing is unaffected because all references
-    resolve while the pin is live."""
+    drop every scoped pin at once; within-query sharing is unaffected
+    because all references resolve while the pin is live."""
     prev = _SCOPED_CACHES.pop(scope, None)
     if prev is not None:
         try:

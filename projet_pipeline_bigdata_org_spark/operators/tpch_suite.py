@@ -2,8 +2,7 @@
 not yet covered by relational.py / relational_ext.py — Q2, Q4, Q5, Q6,
 Q7-Q12, Q14-Q16, Q19, Q20. Together with the existing Q1-shape pricing
 summary and Q3, Q13, Q17, Q18, Q21, Q22 this certifies all 22 classic
-shapes literally (bench.py rolls their medians into the ``tpch22``
-suite metric): the densest join-order / decorrelation / pushdown
+shapes literally: the densest join-order / decorrelation / pushdown
 yardstick a relational user of the engine hits.
 
 Schema adaptations (this corpus is a reduced TPC-H — no partsupp,

@@ -195,13 +195,14 @@ def pipe_sink_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     score_predit is float32 then widened, matching the Cassandra DDL's
     ``float`` column."""
     e = load(spark, sf_dir, "events")
+    n = F.length(F.coalesce("props", F.lit(""))) % 3
     return e.select(
         F.col("event_id").cast("string").alias("id"),
         F.col("user_id").cast("string").alias("author"),
         F.col("event_type").alias("subreddit"),
         F.col("props").alias("text_content"),
-        F.when(F.length("props") % 3 == 0, "neutral")
-        .when(F.length("props") % 3 == 1, "positive")
+        F.when(n == 0, "neutral")
+        .when(n == 1, "positive")
         .otherwise("negative")
         .alias("sentiment"),
         F.col("value").cast("float").cast("double").alias("score_predit"),

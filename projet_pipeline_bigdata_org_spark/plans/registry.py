@@ -35,118 +35,6 @@ class QuerySpec:
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
-# Verification-window rotation. The external driver hash-checks only the
-# first ~50 display names in alphabetical order each round; an ``a0_``
-# prefix sorts a name into that window. Rounds 3-11 maintained a hand-kept
-# ROTATED set for never-driver-checked names (see ROUND*.md); round 12
-# replaced it with a COMPUTED re-certification rotation (VERDICT r11 #2):
-# every round, the window is exactly the ROTATION_WIDTH registered names
-# whose most recent driver row (across all committed CORRECTNESS_r*.json)
-# is OLDEST, ties broken by name. Never-checked names have no row at all,
-# so a new query always enters the window in the same commit that adds it
-# (test_window_discipline stays the backstop), and previously-certified
-# names are re-certified oldest-first — with 227 names and a 50-slot
-# window a full refresh cycle is 5 rounds, so no name's driver row can go
-# stale beyond ~6 rounds in steady state
-# (tests/test_entry.py::test_rotation_recertifies_oldest_first pins the
-# oldest-first property). ``bench.py:_resolve`` accepts ``a0_``-prefixed
-# names so artifacts stay readable across rotations.
-ROTATION_WIDTH = 50
-
-_ROT_CACHE: tuple[int, frozenset[str]] | None = None
-
-
-def _correctness_artifacts(root) -> list[str]:
-    """The CORRECTNESS_r*.json artifacts the rotation may read: the
-    git-TRACKED set when git is available (ADVICE r12 — the driver
-    writes the newest artifact after the builder's last commit, so an
-    untracked file would make this checkout compute a different window
-    than a fresh clone), falling back to a plain glob for exported
-    trees without .git."""
-    import glob
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            ["git", "-C", str(root), "ls-files", "CORRECTNESS_r*.json"],
-            capture_output=True,
-            text=True,
-            timeout=10,
-        )
-        if out.returncode == 0:
-            return [str(root / f) for f in out.stdout.split()]
-    except (OSError, subprocess.SubprocessError):
-        pass
-    return glob.glob(str(root / "CORRECTNESS_r*.json"))
-
-
-def _last_driver_rows() -> dict[str, int]:
-    """Most recent round carrying a driver row per canonical name, from
-    the committed CORRECTNESS_r*.json artifacts at the repo root."""
-    import json
-    import re
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parents[2]
-    last: dict[str, int] = {}
-    for f in _correctness_artifacts(root):
-        m = re.search(r"r(\d+)", Path(f).name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(f) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for k, v in data.items():
-            canon = k.removeprefix("a0_").removeprefix("ext_")
-            if isinstance(v, dict) and (
-                v.get("spark_rows") is not None or v.get("hash_match")
-            ):
-                last[canon] = max(last.get(canon, 0), rnd)
-    return last
-
-
-def _rotated() -> frozenset[str]:
-    """The ROTATION_WIDTH stalest registered names, oldest-row-first
-    (never-checked names rank as round 0 and therefore always rotate in).
-    Cached per registry size so late registrations recompute.
-
-    No-oracle names that already carry a driver row are excluded
-    (VERDICT r16 #4): they structurally cannot produce a hash-green row
-    (the driver records only a rows-only check for them), so re-rotating
-    them burns window slots that could re-certify a stale oracle-gated
-    name. A never-checked no-oracle name still enters once for its
-    first rows-only exposure — after that, its evidence lives in the
-    local suite (tolerance pins / certified twins; see README)."""
-    global _ROT_CACHE
-    if _ROT_CACHE is not None and _ROT_CACHE[0] == len(_REGISTRY):
-        return _ROT_CACHE[1]
-    last = _last_driver_rows()
-    eligible = [
-        n
-        for n, spec in _REGISTRY.items()
-        if spec.oracle is not None or last.get(n, 0) == 0
-    ]
-    ranked = sorted(eligible, key=lambda n: (last.get(n, 0), n))
-    rot = frozenset(ranked[:ROTATION_WIDTH])
-    _ROT_CACHE = (len(_REGISTRY), rot)
-    return rot
-
-
-def __getattr__(name: str):
-    # PEP 562: keep ``from registry import ROTATED`` working while the set
-    # is computed lazily (it needs the full registry + the JSON artifacts)
-    if name == "ROTATED":
-        return _rotated()
-    raise AttributeError(name)
-
-
-def display_name(name: str) -> str:
-    """Driver-facing name: canonical, or ``a0_``-prefixed while rotated."""
-    return f"a0_{name}" if name in _rotated() else name
-
 
 def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     """Decorator registering a ``(spark, sf_dir) -> DataFrame`` builder."""
@@ -163,21 +51,19 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 
 
 def get(name: str) -> QuerySpec:
-    return _REGISTRY[name.removeprefix("a0_") if name.startswith("a0_") else name]
+    return _REGISTRY[name]
 
 
 def all_queries() -> dict[str, QueryFn]:
-    out = {display_name(name): spec.fn for name, spec in _REGISTRY.items()}
-    return dict(sorted(out.items()))
+    return {name: spec.fn for name, spec in sorted(_REGISTRY.items())}
 
 
 def all_oracles() -> dict[str, str]:
-    out = {
-        display_name(name): spec.oracle
-        for name, spec in _REGISTRY.items()
+    return {
+        name: spec.oracle
+        for name, spec in sorted(_REGISTRY.items())
         if spec.oracle is not None
     }
-    return dict(sorted(out.items()))
 
 
 def all_specs() -> dict[str, QuerySpec]:

@@ -42,8 +42,8 @@ def derive_shuffle_partitions(input_bytes: int, total_cores: int) -> int:
     size rule gives ~400k raw partitions — beyond ~130k the M x R shuffle
     block count dominates, guide §2.2's quadratic-blocks warning; AQE
     coalescing trims any overshoot at runtime). Pure function so the rule
-    is testable; wired through $SPARK_GRAFT_INPUT_BYTES below — the local
-    bench default stays DEFAULT_SHUFFLE_PARTITIONS, unchanged."""
+    is testable; wired through $SPARK_GRAFT_INPUT_BYTES below — without
+    it the default stays DEFAULT_SHUFFLE_PARTITIONS."""
     by_size = -(-int(input_bytes) // SHUFFLE_TARGET_PARTITION_BYTES)
     return int(min(max(by_size, 2 * int(total_cores)), 1 << 17))
 
@@ -65,8 +65,8 @@ def _shuffle_partitions() -> str:
     """Scale-adaptive: explicit SPARK_GRAFT_SHUFFLE_PARTITIONS wins; else,
     when the deployment declares its input scale via SPARK_GRAFT_INPUT_BYTES
     (+ optionally SPARK_GRAFT_TOTAL_CORES), the guide §2.2 size rule applies
-    (derive_shuffle_partitions); else the local default. The benchmark sets
-    neither, so its runs stay comparable round over round."""
+    (derive_shuffle_partitions); else the local default. perfbench sets
+    neither, so its runs use DEFAULT_SHUFFLE_PARTITIONS."""
     explicit = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     if explicit is not None:
         return explicit

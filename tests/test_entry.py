@@ -24,139 +24,23 @@ def test_every_query_has_callable():
         assert callable(fn), name
 
 
-def test_oracles_subset_of_queries():
+def test_oracles_subset_of_queries(monkeypatch):
+    """The exports are keyed by canonical registry name, and building them
+    starts no process."""
+    import subprocess
+
+    from projet_pipeline_bigdata_org_spark.plans.registry import all_specs
+
+    def no_subprocess(*args, **kwargs):
+        raise AssertionError(f"queries()/oracle_sql() started a process: {args}")
+
+    monkeypatch.setattr(subprocess, "run", no_subprocess)
+    monkeypatch.setattr(subprocess, "Popen", no_subprocess)
     qs, os_ = entrymod.queries(), entrymod.oracle_sql()
+    specs = all_specs()
+    assert list(qs) == sorted(specs)
+    assert list(os_) == sorted(n for n, spec in specs.items() if spec.oracle is not None)
     assert set(os_) <= set(qs)
-
-
-def test_rotated_exports_match_declared_rotation():
-    """Every ``a0_``-prefixed export corresponds 1:1 to the declared
-    ROTATED set (revived in round 10 for the two names sorting beyond the
-    driver window) — no stray prefixes, no silently-dropped rotations,
-    and each rotated name resolves back to a canonical registry entry."""
-    from projet_pipeline_bigdata_org_spark.plans.registry import ROTATED, get
-
-    prefixed = {n for n in entrymod.queries() if n.startswith("a0_")}
-    assert prefixed == {f"a0_{n}" for n in ROTATED}
-    for n in prefixed:
-        assert get(n).name == n.removeprefix("a0_")
-
-
-def test_window_discipline():
-    """Pre-landing window check (VERDICT r10 #9): every registered display
-    name must either sort inside the driver's 50-name alphabetical
-    correctness window or already carry a cumulative driver row in some
-    CORRECTNESS_r*.json (hash-green, rows-only, or documented no_oracle).
-    A new oracle-gated query landing outside the window with no prior row
-    and no ROTATED entry fails here, in the same commit that adds it."""
-    import glob
-    import json
-
-    repo = pathlib.Path(__file__).resolve().parent.parent
-    covered: set[str] = set()
-    for f in glob.glob(str(repo / "CORRECTNESS_r*.json")):
-        for k, v in json.load(open(f)).items():
-            canon = k.removeprefix("a0_").removeprefix("ext_")
-            if v.get("spark_rows") is not None or v.get("hash_match"):
-                covered.add(canon)
-    names = sorted(entrymod.queries())
-    window = set(names[:50])
-    orphans = [
-        n for n in names if n not in window and n.removeprefix("a0_") not in covered
-    ]
-    assert not orphans, (
-        "queries outside the 50-name driver window with no cumulative "
-        f"CORRECTNESS row — add to ROTATED in the same commit: {orphans}"
-    )
-
-
-def test_rotation_displaces_only_covered_names():
-    """Each name the current rotation pushes out of the 50-name window must
-    already carry a cumulative driver row — rotating in must never orphan a
-    previously-window-resident name."""
-    import glob
-    import json
-
-    from projet_pipeline_bigdata_org_spark.plans.registry import ROTATED
-
-    repo = pathlib.Path(__file__).resolve().parent.parent
-    covered: set[str] = set()
-    for f in glob.glob(str(repo / "CORRECTNESS_r*.json")):
-        for k, v in json.load(open(f)).items():
-            canon = k.removeprefix("a0_").removeprefix("ext_")
-            if v.get("spark_rows") is not None or v.get("hash_match"):
-                covered.add(canon)
-    canon_names = sorted(n.removeprefix("a0_") for n in entrymod.queries())
-    with_rot = {
-        n.removeprefix("a0_") for n in sorted(entrymod.queries())[:50]
-    }
-    without_rot = set(sorted(canon_names)[:50])
-    displaced = {n for n in without_rot if n not in with_rot}
-    uncovered = sorted(n for n in displaced if n not in covered)
-    assert not uncovered, f"rotation would orphan window names: {uncovered}"
-
-
-def test_rotation_recertifies_oldest_first():
-    """Re-certification discipline (VERDICT r11 #2): the upcoming driver
-    window must be exactly the ROTATION_WIDTH registered names with the
-    OLDEST most-recent driver rows (never-checked names rank as round 0),
-    ties broken only at the boundary round. This bounds staleness: with
-    227 names and a 50-slot window a full cycle is 5 rounds, so no name's
-    driver row can lag the current round by more than ~6 in steady state.
-    The set is computed, not hand-kept — this test guards against anyone
-    reverting to a static ROTATED and silently freezing the refresh."""
-    from projet_pipeline_bigdata_org_spark.plans.registry import (
-        ROTATION_WIDTH,
-        _last_driver_rows,
-        all_specs,
-    )
-
-    last = _last_driver_rows()
-    names = sorted(entrymod.queries())
-    window = {n.removeprefix("a0_") for n in names[:ROTATION_WIDTH]}
-    # no-oracle names with a prior rows-only row are rotation-exempt
-    # (VERDICT r16 #4): they can never go hash-green, so staleness
-    # comparisons only apply to the oracle-gated population
-    exempt = {
-        n
-        for n, spec in all_specs().items()
-        if spec.oracle is None and last.get(n, 0) > 0
-    }
-    outside = {
-        n.removeprefix("a0_") for n in names[ROTATION_WIDTH:]
-    } - exempt
-    if not outside:
-        return
-    newest_in = max(last.get(n, 0) for n in window)
-    oldest_out = min(last.get(n, 0) for n in outside)
-    assert newest_in <= oldest_out, (
-        "window holds a fresher row than a name left outside: "
-        f"newest inside r{newest_in} > oldest outside r{oldest_out}"
-    )
-    # every never-checked name must be inside the window (first driver
-    # exposure in the same round the query lands)
-    unchecked_out = sorted(n for n in outside if last.get(n, 0) == 0)
-    assert not unchecked_out, f"never-checked names outside window: {unchecked_out}"
-
-
-def test_window_slots_all_oracle_gated():
-    """VERDICT r16 #4: every slot in the 50-name driver window must go to
-    a name that can actually produce a hash-green row — i.e. carries an
-    oracle — unless it is a brand-new no-oracle name awaiting its first
-    rows-only exposure. r16 burned 2 of 50 slots re-checking names that
-    structurally cannot go green."""
-    from projet_pipeline_bigdata_org_spark.plans.registry import (
-        _last_driver_rows,
-        get,
-    )
-
-    last = _last_driver_rows()
-    osql = set(entrymod.oracle_sql())
-    for n in sorted(entrymod.queries())[:50]:
-        canon = get(n).name
-        assert n in osql or last.get(canon, 0) == 0, (
-            f"window slot wasted on already-checked no-oracle name {n}"
-        )
 
 
 def test_every_no_oracle_query_has_readme_rationale():
@@ -164,7 +48,7 @@ def test_every_no_oracle_query_has_readme_rationale():
     appears by name in README's "rows-only forever" rationale section, so
     the oracle/no-oracle split can't silently drift as queries are added."""
     qs, os_ = entrymod.queries(), entrymod.oracle_sql()
-    no_oracle = sorted(n.removeprefix("a0_") for n in set(qs) - set(os_))
+    no_oracle = sorted(set(qs) - set(os_))
     text = README.read_text()
     m = re.search(
         r"### Why the remaining no-oracle queries are rows-only forever(.*?)\n## ",

@@ -606,8 +606,14 @@ def test_funnel_ladder_ledger_invariants(spark, sf_dir):
         assert ladder[s] == report[s], s
 
 
-def test_enrichment_udf_fallback_and_chunking(spark):
+def test_enrichment_udf_fallback_and_chunking(spark, tmp_path):
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from projet_pipeline_bigdata_org_spark.catalog import load
     from projet_pipeline_bigdata_org_spark.ml.enrich import (
+        SQL_STUB_SENTIMENT,
         make_sentiment_udf,
         stub_backend,
     )
@@ -627,6 +633,43 @@ def test_enrichment_udf_fallback_and_chunking(spark):
 
     got = df.select(make_sentiment_udf(backend=boom)(F.col("text")).alias("s")).collect()
     assert {r.s for r in got} == {"neutral"}
+
+    # NULL, empty and non-empty text get the same label from all three
+    # twins: the UDF, the JVM expression of etl_sink_projection and the
+    # DuckDB SQL (a NULL text counts as empty, so it is neutral)
+    props = [None, "", "ab", "a"]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(props)), pa.int64()),
+            "ts": pa.array([0] * len(props), pa.timestamp("us")),
+            "user_id": pa.array([1] * len(props), pa.int64()),
+            "event_type": ["t"] * len(props),
+            "value": [1.0] * len(props),
+            "props": props,
+        }),
+        tmp_path / "events.parquet",
+    )
+    udf = {
+        r.event_id: r.s
+        for r in load(spark, str(tmp_path), "events")
+        .select("event_id", make_sentiment_udf()(F.col("props")).alias("s"))
+        .collect()
+    }
+    jvm = {
+        int(r.id): r.sentiment
+        for r in _Q["etl_sink_projection"].fn(spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path / 'events.parquet'}')"
+    )
+    sql = dict(con.execute(
+        f"SELECT event_id, {SQL_STUB_SENTIMENT.format(c='props')} FROM events"
+    ).fetchall())
+    expected = dict(enumerate(["neutral", "neutral", "negative", "positive"]))
+    assert udf == expected
+    assert jvm == expected
+    assert sql == expected
 
 
 def test_multimodal_real_decoder_parses_headers_and_stubs_the_rest():

@@ -373,8 +373,6 @@ def test_resize_plan_arithmetic_and_registered_pipeline(spark):
     assert resize_plan(1024, 768) == (512, 384)
     assert resize_plan(100_000, 7) == (512, 1)           # max(1,.) guard
     plans.load_all()
-    # registry.get resolves canonical names whether or not the name is
-    # currently window-rotated to an a0_ export
     got = {r.doc_id: r for r in plans.registry.get("mm_resize_plan").fn(
         spark, "ignored").collect()}
     assert set(got) == {3_000_000_001, 3_000_000_002, 3_000_000_003, 3_000_000_005}
