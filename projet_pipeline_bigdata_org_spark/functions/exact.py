@@ -37,18 +37,3 @@ def davg(col: str | Column, alias: str) -> Column:
     """Order-independent double average: exact decimal sum, double division."""
     c = F.col(col) if isinstance(col, str) else col
     return (F.sum(dec(c)).cast("double") / F.count(c)).alias(alias)
-
-
-def bigint(col: Column, alias: str | None = None) -> Column:
-    """Cast int-valued expression to BIGINT (DuckDB's default integer width)."""
-    c = col.cast("long")
-    return c.alias(alias) if alias else c
-
-
-# SQL-side snippets (kept next to the Spark helpers so the twins stay in sync)
-def sql_dsum(expr: str, alias: str) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE) AS {alias}"
-
-
-def sql_davg(expr: str, alias: str) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,6))) AS DOUBLE) / COUNT({expr}) AS {alias}"

@@ -15,22 +15,21 @@ from pyspark.sql import functions as F
 DEFAULT_SALTS = 16
 
 
-def with_salt(df: DataFrame, n_salts: int = DEFAULT_SALTS, col_name: str = "_salt") -> DataFrame:
-    """Add a uniform salt column derived from a stable row hash (not rand():
-    deterministic across retries, which keeps shuffle outputs recomputable)."""
+def with_salt(df: DataFrame, n_salts: int = DEFAULT_SALTS) -> DataFrame:
+    """Add a uniform ``_salt`` column derived from a stable row hash (not
+    rand(): deterministic across retries, which keeps shuffle outputs
+    recomputable)."""
     return df.withColumn(
-        col_name, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
+        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
     )
 
 
-def salted_count(
-    df: DataFrame, keys: Sequence[str], n_salts: int = DEFAULT_SALTS
-) -> DataFrame:
+def salted_count(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Two-phase count for skewed group keys: groupBy(key, salt) partial →
     groupBy(key) final. Catalyst's partial aggregation usually makes this
     unnecessary; it matters for high-cardinality-payload aggs
     (collect_list/exact distinct) where partial combine can't shrink."""
-    partial = with_salt(df, n_salts).groupBy(*keys, "_salt").agg(
+    partial = with_salt(df).groupBy(*keys, "_salt").agg(
         F.count(F.lit(1)).alias("_partial")
     )
     return partial.groupBy(*keys).agg(F.sum("_partial").alias("n"))

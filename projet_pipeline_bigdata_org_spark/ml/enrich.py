@@ -64,26 +64,23 @@ def make_http_backend(url: str, timeout: float = 5.0) -> Backend:
     return backend
 
 
-def make_sentiment_udf(
-    backend: Backend = stub_backend,
-    batch_size: int = DEFAULT_BATCH_SIZE,
-    fill: str = NEUTRAL_FILL,
-):
-    """Arrow-vectorized sentiment UDF with mini-batch chunking and per-chunk
-    neutral-fill fallback (reference semantics: preprocessor.py:53-56)."""
+def make_sentiment_udf(backend: Backend = stub_backend):
+    """Arrow-vectorized sentiment UDF with DEFAULT_BATCH_SIZE-text chunking
+    and per-chunk neutral-fill fallback (reference semantics:
+    preprocessor.py:53-56)."""
 
     @F.pandas_udf(T.StringType())
     def sentiment(s: pd.Series) -> pd.Series:
         vals = s.tolist()
         out: list[str] = []
-        for i in range(0, len(vals), batch_size):
-            chunk = vals[i : i + batch_size]
+        for i in range(0, len(vals), DEFAULT_BATCH_SIZE):
+            chunk = vals[i : i + DEFAULT_BATCH_SIZE]
             try:
                 labels = backend(chunk)
                 if len(labels) != len(chunk):
                     raise ValueError("backend returned wrong-length labels")
             except Exception:
-                labels = [fill] * len(chunk)
+                labels = [NEUTRAL_FILL] * len(chunk)
             out.extend(labels)
         return pd.Series(out, index=s.index)
 

@@ -111,18 +111,18 @@ def build_feature_pipeline(cfg: PipelineConfig = PipelineConfig()) -> Pipeline:
     return Pipeline(stages=[tokenizer, stop, w2v, cv, lda, indexer, assembler, rf])
 
 
-def prepare_documents(df: DataFrame, label_expr: str = "ln(n_chars)") -> DataFrame:
+def prepare_documents(df: DataFrame) -> DataFrame:
     """Documents table → training frame: cleaned text + a regression label
     (log char count stands in for the reference's Reddit `score`)."""
     return df.select(
         "doc_id",
         "lang",
         clean_text("text").alias("clean"),
-        F.expr(label_expr).alias("label"),
+        F.ln("n_chars").alias("label"),
     ).filter(F.length("clean") > 0)
 
 
-def topic_labels(model: PipelineModel, max_terms: int = 3) -> DataFrame:
+def topic_labels(model: PipelineModel) -> DataFrame:
     """M6 re-done Spark-first: describeTopics × CV vocabulary → a (topic_id,
     topic_label) DataFrame ('w1-w2-w3'), ready for broadcast join — replaces
     the reference's driver dict + per-row UDF."""
@@ -133,7 +133,7 @@ def topic_labels(model: PipelineModel, max_terms: int = 3) -> DataFrame:
     vocab_df = spark.createDataFrame(
         [(i, w) for i, w in enumerate(vocab)], ["term_id", "term"]
     )
-    topics = lda_model.describeTopics(max_terms).select(
+    topics = lda_model.describeTopics(3).select(
         "topic", F.posexplode("termIndices").alias("pos", "term_id")
     )
     return (

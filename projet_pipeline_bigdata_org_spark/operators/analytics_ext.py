@@ -1858,13 +1858,13 @@ def cm_buckets(t: F.Column) -> F.Column:
     )
 
 
-def cm_sketch_counters(toks: DataFrame, col: str = "tok") -> DataFrame:
-    """Count-min counter table (j, bucket, c) from a token stream — one
+def cm_sketch_counters(toks: DataFrame) -> DataFrame:
+    """Count-min counter table (j, bucket, c) from a ``tok`` stream — one
     explode to d pairs per token, partial-agg'd to <= d x w rows. Counters
     are exact BIGINTs, so sketches ADD across shards/epochs (the merge the
     streaming sink and any map-side combine rely on)."""
     return (
-        toks.select(F.explode(cm_buckets(F.col(col))).alias("p"))
+        toks.select(F.explode(cm_buckets(F.col("tok"))).alias("p"))
         .select("p.j", "p.bucket")
         .groupBy("j", "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))

@@ -12,7 +12,7 @@ packing (packing).
 - ``select_token_budget`` — greedy per-shard document selection under a
   fixed token budget (longest-first): the "fill the training budget"
   primitive. Same per-shard window discipline and shard fan-out as
-  packing.pack_sequences (``packing.resolve_shards()``); like the three
+  packing.pack_sequences (``packing.N_SHARDS``); like the three
   ``pack_*`` queries it ships a ``select_token_budget_at(spark, sf_dir,
   n_shards)`` + ``select_token_budget_oracle(n_shards)`` pair so tests
   prove parity at non-default fan-outs too.
@@ -168,7 +168,7 @@ def curate_split_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: per-shard token budget for greedy selection; one shard's selection is
 #: independent of every other shard, so total selected tokens scale as
-#: budget × resolve_shards() — raise either knob for a bigger training mix
+#: budget × packing.N_SHARDS
 SELECT_BUDGET = SEQ_BUDGET
 
 
@@ -218,7 +218,7 @@ def select_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id) order while the running total stays within SELECT_BUDGET.
 
     Scale shape: identical to pack_sequences — the window partitions by the
-    configurable shard key (packing.resolve_shards), never a global sort;
+    shard key (packing.N_SHARDS), never a global sort;
     per-task state is one shard's running sum. The greedy-by-length rule is
     a stand-in for greedy-by-quality: swap the ORDER BY for a quality score
     column and the plan is unchanged."""
@@ -653,7 +653,7 @@ def curate_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: tokens per difficulty stage (coarse buckets -> short docs first)
 CURRICULUM_STAGE_TOKENS = 50
 #: deterministic within-stage shuffle fan-out (per-shard window discipline,
-#: same rationale as packing.resolve_shards)
+#: same rationale as packing.N_SHARDS)
 CURRICULUM_SHARDS = 16
 
 

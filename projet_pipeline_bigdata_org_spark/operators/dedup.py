@@ -511,14 +511,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
-    d: DataFrame,
-    max_shingle_df: int = MAX_SHINGLE_DF,
-    threshold: float = JACCARD_THRESHOLD,
-) -> DataFrame:
-    """Jaccard near-dup pairs over any (doc_id, text) DataFrame; the cap and
-    threshold are parameters so invariants can exercise hot-boilerplate
-    corpora directly (see test_llm_ops.py)."""
+def ngram_jaccard_pairs(d: DataFrame, max_shingle_df: int = MAX_SHINGLE_DF) -> DataFrame:
+    """Jaccard >= JACCARD_THRESHOLD near-dup pairs over any (doc_id, text)
+    DataFrame; the cap is a parameter so invariants can exercise
+    hot-boilerplate corpora directly (see test_llm_ops.py)."""
     # staged like dedup_minhash_lsh: the shingle table persists once — it is
     # read by the DF-count, the anti-join, both self-join sides, and the size
     # lookup; unpersisted it would re-tokenize/shingle the corpus 4×
@@ -561,7 +557,7 @@ def ngram_jaccard_pairs(
         inter.join(sa, F.col("sa.doc_id") == F.col("a_id"))
         .join(sb, F.col("sb.doc_id") == F.col("b_id"))
         .select("a_id", "b_id", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
 
@@ -725,12 +721,13 @@ def portable_band_bucket(sig: F.Column, band: int) -> F.Column:
     )
 
 
-def sql_band_bucket(row_cols: tuple[str, ...], seed: str = "band") -> str:
-    """DuckDB twin of portable_band_bucket: the identical nested coin fold
-    over the pivoted per-band row-min columns."""
+def sql_band_bucket(row_cols: tuple[str, ...]) -> str:
+    """DuckDB twin of portable_band_bucket: the identical nested coin fold,
+    seeded by the ``band`` column, over the pivoted per-band row-min
+    columns."""
     from projet_pipeline_bigdata_org_spark.functions.hashing import sql_hash_coin
 
-    acc = seed
+    acc = "band"
     for c in row_cols:
         acc = sql_hash_coin(f"({acc} + {c} * {BAND_MIX})")
     return acc
@@ -1892,31 +1889,27 @@ def _bloom_slice_pos(sha_col: F.Column, off: int) -> F.Column:
     return F.conv(F.substring(sha_col, off, 4), 16, 10).cast("long")
 
 
-def bloom_position_table(history: DataFrame, sha_col: str = "content_sha") -> DataFrame:
-    """The Bloom filter as a table of distinct set positions (<=
-    BLOOM_SHA_BITS rows at ANY history size) — shared by the batch
-    operator and the streaming HistoryDedupSink so the bits cannot
+def bloom_position_table(history: DataFrame) -> DataFrame:
+    """The Bloom filter over ``content_sha`` as a table of distinct set
+    positions (<= BLOOM_SHA_BITS rows at ANY history size) — shared by the
+    batch operator and the streaming HistoryDedupSink so the bits cannot
     drift between the two admission paths."""
-    return history.select(
-        F.explode(
-            F.array(*[_bloom_slice_pos(F.col(sha_col), o) for o in BLOOM_SHA_OFFSETS])
-        ).alias("pos")
-    ).distinct()
+    sha = F.col("content_sha")
+    positions = F.array(*[_bloom_slice_pos(sha, o) for o in BLOOM_SHA_OFFSETS])
+    return history.select(F.explode(positions).alias("pos")).distinct()
 
 
-def mark_bloom_candidates(
-    df: DataFrame, bloom: DataFrame, sha_col: str = "content_sha"
-) -> DataFrame:
-    """Append ``is_cand`` (1 iff ALL four sha-slice positions are set) via
-    four explicit-BROADCAST left joins — the probed side never shuffles,
-    and the flag is never NULL (a NULL sha matches no position and lands
-    at 0), so candidate/rest splits lose no rows."""
+def mark_bloom_candidates(df: DataFrame, bloom: DataFrame) -> DataFrame:
+    """Append ``is_cand`` (1 iff ALL four ``content_sha`` slice positions
+    are set) via four explicit-BROADCAST left joins — the probed side
+    never shuffles, and the flag is never NULL (a NULL sha matches no
+    position and lands at 0), so candidate/rest splits lose no rows."""
     out = df
     k = len(BLOOM_SHA_OFFSETS)
     for i, off in enumerate(BLOOM_SHA_OFFSETS):
         out = out.join(
             F.broadcast(bloom.select(F.col("pos").alias(f"_bf{i}"))),
-            _bloom_slice_pos(F.col(sha_col), off) == F.col(f"_bf{i}"),
+            _bloom_slice_pos(F.col("content_sha"), off) == F.col(f"_bf{i}"),
             "left",
         )
     is_cand = F.when(

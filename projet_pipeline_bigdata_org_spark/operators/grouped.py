@@ -347,8 +347,12 @@ def _symmetric(edges: DataFrame) -> DataFrame:
     )
 
 
+#: round cap of connected_components_star; rounds grow with log(diameter)
+STAR_MAX_ROUNDS = 50
+
+
 def connected_components_star(
-    edges: DataFrame, max_iter: int = 50, reliable_checkpoint: bool | None = None
+    edges: DataFrame, reliable_checkpoint: bool | None = None
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
@@ -423,7 +427,7 @@ def connected_components_star(
     e = _ckpt(e)
     prev_sum = _checksum(e)
     converged = False
-    for _ in range(max_iter):
+    for _ in range(STAR_MAX_ROUNDS):
         prev_e = e
         e = _ckpt(small_star(large_star(e)))
         cur_sum = _checksum(e)
@@ -436,7 +440,7 @@ def connected_components_star(
         prev_sum = cur_sum
     if not converged:
         raise RuntimeError(
-            f"connected_components_star did not converge within {max_iter} rounds"
+            f"connected_components_star did not converge within {STAR_MAX_ROUNDS} rounds"
         )
     # fixpoint edge set is (node > center) pairs; centers label themselves
     labels = e.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
@@ -622,12 +626,10 @@ def copurchase_pairs(li: DataFrame) -> DataFrame:
     return _basket_pairs(li).dropDuplicates(["u", "v"])
 
 
-def sym_edges_dedup(
-    pairs_raw: DataFrame, key: str, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def sym_edges_dedup(pairs_raw: DataFrame, key: str) -> DataFrame:
     """Symmetrized, deduplicated edge list hash-partitioned on ``key`` —
-    the edge build shared by the iterative-graph operators that persist
-    their edges partitioned on one endpoint (kcore/bfs/walk/lpa).
+    the (src, dst) edge build shared by the iterative-graph operators that
+    persist their edges partitioned on one endpoint (kcore/bfs/walk/lpa).
 
     r18 (guide §2.4 "two operations keyed the same way can share one
     exchange"): takes the RAW basket pairs and deduplicates AFTER the
@@ -649,9 +651,9 @@ def sym_edges_dedup(
     repeatedly-scanned state table should be compute-sized, not
     size-coalesced)."""
     return (
-        sym_uv(pairs_raw, src, dst)
+        sym_uv(pairs_raw)
         .repartition(pairs_raw.sparkSession.sparkContext.defaultParallelism, key)
-        .dropDuplicates([src, dst])
+        .dropDuplicates(["src", "dst"])
     )
 
 

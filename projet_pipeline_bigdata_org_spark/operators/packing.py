@@ -14,23 +14,18 @@ global single-partition window exists at scale:
   DuckDB oracle replays the same recurrence with a recursive CTE.
 
 Scale posture: the shard key (``doc_id % N_SHARDS``) bounds every window /
-grouped-map to one shard. N_SHARDS is CONFIGURATION, not a constant:
-``$SPARK_GRAFT_PACK_SHARDS`` if set, else the engine's shuffle fan-out
-(``session.DEFAULT_SHUFFLE_PARTITIONS``) — so a cluster deployment that
-raises shuffle parallelism for 100 TB gets matching packing fan-out, and
-per-task window state stays constant. The registered oracles render from
-the same resolved value, so Spark and DuckDB always agree on the shard
+grouped-map to one shard. N_SHARDS is the engine's default shuffle fan-out
+(``session.DEFAULT_SHUFFLE_PARTITIONS``). The registered oracles render
+from the same constant, so Spark and DuckDB always agree on the shard
 layout. Every query also has a ``*_at(spark, sf_dir, n_shards)`` builder +
 ``*_oracle(n_shards)`` template pair so tests prove parity holds at
-non-default fan-outs. No global ordering, no driver collect.
+other fan-outs. No global ordering, no driver collect.
 
 Reference seed: the reference's micro-batch accumulation (SURVEY §2.1 S5)
 is record-oriented; packing is the training-side counterpart it lacks.
 """
 
 from __future__ import annotations
-
-import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -46,17 +41,8 @@ from projet_pipeline_bigdata_org_spark.session import DEFAULT_SHUFFLE_PARTITIONS
 SEQ_BUDGET = 256
 
 
-def resolve_shards() -> int:
-    """Shard fan-out: $SPARK_GRAFT_PACK_SHARDS, else the engine's shuffle
-    parallelism — the knob a deployment already scales with data volume."""
-    env = os.environ.get("SPARK_GRAFT_PACK_SHARDS")
-    if env:
-        return max(1, int(env))
-    return DEFAULT_SHUFFLE_PARTITIONS
-
-
-#: resolved once per process; registered oracles render from the same value
-N_SHARDS = resolve_shards()
+#: shard fan-out; registered oracles render from the same value
+N_SHARDS = DEFAULT_SHUFFLE_PARTITIONS
 
 _TOK_SQL = SQL_WS_TOKENS.format(c="text")
 

@@ -252,7 +252,7 @@ def pipe_enrich_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", sent(F.col("text")).alias("sentiment"))
 
 
-def with_quality_metrics(df: DataFrame, text_col: str = "text"):
+def with_quality_metrics(df: DataFrame):
     """Attach free-riding data-quality metrics to a DataFrame via
     ``df.observe``: row count, null/empty-text count, and total text bytes
     are accumulated DURING whatever action the caller runs next — no second
@@ -271,9 +271,9 @@ def with_quality_metrics(df: DataFrame, text_col: str = "text"):
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(
             F.when(
-                F.col(text_col).isNull() | (F.length(text_col) == 0), 1
+                F.col("text").isNull() | (F.length("text") == 0), 1
             ).otherwise(0)
         ).alias("n_null_or_empty"),
-        F.sum(F.octet_length(text_col)).alias("text_bytes"),
+        F.sum(F.octet_length("text")).alias("text_bytes"),
     )
     return observed, obs

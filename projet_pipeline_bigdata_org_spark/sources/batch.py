@@ -32,41 +32,24 @@ def read_json(
     )
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    header: bool = True,
-    sep: str = ",",
-) -> DataFrame:
-    """Schema-enforced CSV scan (no inferSchema — one pass, deterministic
-    types)."""
-    return (
-        spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("sep", sep)
-        .csv(path)
-    )
+def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """Schema-enforced scan of comma-separated CSV with a header line (no
+    inferSchema — one pass, deterministic types)."""
+    return spark.read.schema(schema).option("header", "true").csv(path)
 
 
-def read_orc(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
+def read_orc(spark: SparkSession, path: str) -> DataFrame:
     """ORC scan — the columnar format Spark supports natively besides
     parquet (vectorized reader, predicate pushdown, column pruning all
-    apply). Schema optional: ORC files are self-describing; pass one to
-    enforce column types on heterogeneous directories."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
+    apply). ORC files are self-describing, so no schema is passed."""
+    return spark.read.orc(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC write (zlib default compression). Functionally parquet's peer in
-    this engine; exists so ORC-standardized lakes can adopt the pipeline
-    without a format migration."""
-    df.write.mode(mode).orc(path)
+def write_orc(df: DataFrame, path: str) -> None:
+    """ORC overwrite (zlib default compression). Functionally parquet's
+    peer in this engine; exists so ORC-standardized lakes can adopt the
+    pipeline without a format migration."""
+    df.write.mode("overwrite").orc(path)
 
 
 def read_xml(
@@ -90,14 +73,12 @@ def read_xml(
     return reader.load(path)
 
 
-def write_xml(
-    df: DataFrame, path: str, row_tag: str, mode: str = "overwrite"
-) -> None:
-    """XML write (built-in sink, one <rowTag> element per row) — exists
+def write_xml(df: DataFrame, path: str, row_tag: str) -> None:
+    """XML overwrite (built-in sink, one <rowTag> element per row) — exists
     for the interchange exports ORC/CSV cover on the columnar side;
     row-major text, so parquet stays the lake format and this is an
     edge-export only."""
-    df.write.mode(mode).format("xml").option("rowTag", row_tag).save(path)
+    df.write.mode("overwrite").format("xml").option("rowTag", row_tag).save(path)
 
 
 def read_binary_files(
@@ -208,11 +189,12 @@ def write_bucketed_table(
     w.saveAsTable(table)
 
 
+#: the column a PERMISSIVE JSON scan puts a malformed line's raw text in
+CORRUPT_COL = "_corrupt_record"
+
+
 def read_jsonl_with_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    corrupt_col: str = "_corrupt_record",
+    spark: SparkSession, path: str, schema: T.StructType
 ) -> tuple[DataFrame, DataFrame]:
     """PERMISSIVE JSONL scan that splits clean rows from a quarantine of
     malformed lines (raw text preserved for replay/debugging) — at 100 TB
@@ -220,24 +202,24 @@ def read_jsonl_with_quarantine(
     silently nulling them (plain PERMISSIVE) both lose data. One scan, one
     filter each side, no second pass.
 
-    Note the Spark subtlety: a row is corrupt iff `corrupt_col` is set; the
+    Note the Spark subtlety: a row is corrupt iff `CORRUPT_COL` is set; the
     corrupt-record column must be part of the declared schema, and filtering
     on it requires the scan to retain raw text (Spark forbids referencing it
     from a bare scan without a materialization boundary — a cache here).
     """
     full_schema = T.StructType(
-        schema.fields + [T.StructField(corrupt_col, T.StringType(), True)]
+        schema.fields + [T.StructField(CORRUPT_COL, T.StringType(), True)]
     )
     df = (
         spark.read.schema(full_schema)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
         .cache()
     )
-    good = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    quarantine = df.filter(F.col(corrupt_col).isNotNull()).select(
-        F.col(corrupt_col).alias("raw")
+    good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+    quarantine = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
+        F.col(CORRUPT_COL).alias("raw")
     )
     return good, quarantine
 

@@ -68,15 +68,6 @@ def file_stream(
     return reader.format(fmt).load(path)
 
 
-def rate_stream(spark: SparkSession, rows_per_second: int = 10) -> DataFrame:
-    """Built-in rate source (timestamp, value) for smoke tests."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-
-
 def kafka_stream(
     spark: SparkSession,
     bootstrap_servers: str,
@@ -99,43 +90,39 @@ def kafka_stream(
     )
 
 
-def parse_json_records(kafka_df: DataFrame, schema: T.StructType = RECORD_SCHEMA) -> DataFrame:
-    """Kafka value bytes → typed columns (P1+P2: CAST value AS STRING →
-    from_json → flatten; engine.py:245-247)."""
+def parse_json_records(kafka_df: DataFrame) -> DataFrame:
+    """Kafka value bytes → ``RECORD_SCHEMA`` columns (P1+P2: CAST value AS
+    STRING → from_json → flatten; engine.py:245-247)."""
     return (
         kafka_df.selectExpr("CAST(value AS STRING) AS raw")
-        .select(F.from_json("raw", schema).alias("data"))
+        .select(F.from_json("raw", RECORD_SCHEMA).alias("data"))
         .select("data.*")
     )
 
 
 def windowed_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-    window: str = "5 minutes",
-    keys: Sequence[str] = ("event_type",),
+    events: DataFrame, watermark: str = "10 minutes", window: str = "5 minutes"
 ) -> DataFrame:
-    """Watermarked tumbling-window counts — the canonical stateful agg.
-    Late rows beyond the watermark are dropped (append mode)."""
+    """Watermarked tumbling-window counts of ``event_type`` over ``ts`` —
+    the canonical stateful agg. Late rows beyond the watermark are dropped
+    (append mode)."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), *keys)
+        events.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), *keys, "n_events")
+        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
 
 
 def dedup_within_watermark(
     events: DataFrame,
     keys: Sequence[str] = ("event_id",),
-    ts_col: str = "ts",
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """Streaming dedup with bounded state (dropDuplicatesWithinWatermark):
-    the id-dedup capability (reference S8) with state that expires instead
-    of growing forever."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+    """Streaming dedup with bounded state (dropDuplicatesWithinWatermark
+    over ``ts``): the id-dedup capability (reference S8) with state that
+    expires instead of growing forever."""
+    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         list(keys)
     )
 
@@ -172,6 +159,21 @@ def idempotent_parquet_batch_writer(path: str) -> BatchWriter:
     return write
 
 
+def _record_epoch(
+    stats: dict, per_epoch: dict, epoch_id: int, counts: dict, snapshot: bool
+) -> None:
+    """Keep ``counts`` as epoch ``epoch_id``'s entry of ``per_epoch`` and
+    set each of its keys in ``stats`` to the sum over epochs — or, with
+    ``snapshot``, to the newest epoch's value — so a replayed epoch
+    leaves ``stats`` as it was."""
+    per_epoch[epoch_id] = counts
+    newest = per_epoch[max(per_epoch)]
+    for key in counts:
+        stats[key] = (
+            newest[key] if snapshot else sum(c[key] for c in per_epoch.values())
+        )
+
+
 @dataclass
 class FailoverBatchSink:
     """foreachBatch sink with primary→fallback failover (reference T4/S5/S6,
@@ -180,7 +182,9 @@ class FailoverBatchSink:
     there is no toPandas() driver collect — the fallback is a distributed
     write too. The empty-batch guard still runs one short isEmpty() job
     per batch; an empty batch reaches neither writer and counts as
-    ``stats["empty"]``.
+    ``stats["empty"]``. ``rows_written``, ``failover`` and ``dropped`` are
+    kept per epoch like the epoch sinks' counts, so a replayed epoch
+    replaces its own entry; ``batches`` and ``empty`` count calls.
 
     A transform callable runs inside the micro-batch (the reference's
     _transform_batch slot). Poison batches are counted and dropped after
@@ -190,6 +194,7 @@ class FailoverBatchSink:
     fallback: BatchWriter | None = None
     transform: Callable[[DataFrame], DataFrame] | None = None
     stats: dict = field(default_factory=lambda: {"batches": 0, "empty": 0, "failover": 0, "dropped": 0})
+    _epoch_counts: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         self.stats["batches"] += 1
@@ -203,24 +208,22 @@ class FailoverBatchSink:
 
         obs = Observation(f"sink_epoch_{epoch_id}")
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        counts = {"rows_written": 0, "failover": 0, "dropped": 0}
         try:
             self.primary(df, epoch_id)
-            self.stats["rows_written"] = self.stats.get("rows_written", 0) + (
-                obs.get.get("rows", 0)
-            )
+            counts["rows_written"] = obs.get.get("rows", 0)
         except Exception as primary_err:
-            self.stats["failover"] += 1
+            counts["failover"] = counts["dropped"] = 1
             log.warning("primary sink failed for epoch %s: %s", epoch_id, primary_err)
-            if self.fallback is None:
-                self.stats["dropped"] += 1
-                return
-            try:
-                self.fallback(df, epoch_id)
-            except Exception as fallback_err:  # drop poison batch, keep stream alive
-                self.stats["dropped"] += 1
-                log.error(
-                    "fallback sink failed for epoch %s: %s", epoch_id, fallback_err
-                )
+            if self.fallback is not None:
+                try:
+                    self.fallback(df, epoch_id)
+                    counts["dropped"] = 0
+                except Exception as fallback_err:  # drop poison batch, keep stream alive
+                    log.error(
+                        "fallback sink failed for epoch %s: %s", epoch_id, fallback_err
+                    )
+        _record_epoch(self.stats, self._epoch_counts, epoch_id, counts, snapshot=False)
 
 
 def _epoch_history_scan(
@@ -289,18 +292,11 @@ class _EpochSink:
         if batch_df.isEmpty():  # P9 empty-batch guard
             return
         try:
-            self._epoch_counts[epoch_id] = self._epoch(batch_df, epoch_id)
+            counts = self._epoch(batch_df, epoch_id)
         finally:
             while self._caches:
                 self._caches.pop().unpersist()
-        per_epoch = self._epoch_counts
-        newest = per_epoch[max(per_epoch)]
-        for key in per_epoch[epoch_id]:
-            self.stats[key] = (
-                newest[key]
-                if self.SNAPSHOT
-                else sum(counts[key] for counts in per_epoch.values())
-            )
+        _record_epoch(self.stats, self._epoch_counts, epoch_id, counts, self.SNAPSHOT)
 
     def _prior(self, path: str, schema: str, epoch_id: int) -> DataFrame:
         return _epoch_history_scan(self.spark, path, schema, epoch_id)
@@ -573,12 +569,11 @@ class MinHashHistoryDedupSink(_EpochSink):
     spark: SparkSession
     out_path: str
     history_path: str
-    content_col: str = "text"
-    id_col: str = "doc_id"
-    threshold: float | None = None  # default: operators.dedup.JACCARD_THRESHOLD
     stats: dict = field(
         default_factory=lambda: {"batches": 0, "admitted": 0, "rejected": 0}
     )
+
+    id_col = "doc_id"
 
     def _epoch(self, batch_df: DataFrame, epoch_id: int) -> dict:
         from projet_pipeline_bigdata_org_spark.operators.dedup import (
@@ -591,7 +586,6 @@ class MinHashHistoryDedupSink(_EpochSink):
             ws_tokens,
         )
 
-        thr = JACCARD_THRESHOLD if self.threshold is None else self.threshold
         batch_df = self._cache(batch_df)
         # one shingle pass, cached: feeds the band table, the verify join,
         # and the history write (same projection-collapse guard as the
@@ -599,16 +593,15 @@ class MinHashHistoryDedupSink(_EpochSink):
         # mins would re-hash every shingle 32x)
         sh = self._cache(
             batch_df.select(
-                F.col(self.id_col).alias("doc_id"),
-                F.array_distinct(shingles(ws_tokens(self.content_col))).alias("sh"),
+                "doc_id", F.array_distinct(shingles(ws_tokens("text"))).alias("sh")
             )
             .filter(F.size("sh") > 0)
             .select("doc_id", "sh", shingle_hashes(F.col("sh")).alias("hh"))
         )
         rejected_ids = (
-            _minhash_history_hits(self, sh, minhash_band_table(sh), epoch_id, thr)
-            .select(F.col("doc_id").alias(self.id_col))
-            .distinct()
+            _minhash_history_hits(
+                self, sh, minhash_band_table(sh), epoch_id, JACCARD_THRESHOLD
+            ).distinct()
         )
         return _admit_batch(self, batch_df, sh, rejected_ids, epoch_id)
 
@@ -650,11 +643,11 @@ class SimHashHistoryDedupSink(_EpochSink):
     spark: SparkSession
     out_path: str
     history_path: str
-    content_col: str = "text"
-    id_col: str = "doc_id"
     stats: dict = field(
         default_factory=lambda: {"batches": 0, "admitted": 0, "rejected": 0}
     )
+
+    id_col = "doc_id"
 
     def _epoch(self, batch_df: DataFrame, epoch_id: int) -> dict:
         from projet_pipeline_bigdata_org_spark.operators.dedup import (
@@ -672,8 +665,7 @@ class SimHashHistoryDedupSink(_EpochSink):
         batch_df = self._cache(batch_df)
         fp = self._cache(
             batch_df.select(
-                F.col(self.id_col).alias("doc_id"),
-                F.array_distinct(shingles(ws_tokens(self.content_col))).alias("feats"),
+                "doc_id", F.array_distinct(shingles(ws_tokens("text"))).alias("feats")
             )
             .filter(F.size("feats") > 0)
             .select("doc_id", F.transform("feats", lambda t: F.xxhash64(t)).alias("hh"))
@@ -703,7 +695,7 @@ class SimHashHistoryDedupSink(_EpochSink):
                 & (F.col("b.chunk_val") == F.col("h.chunk_val")),
             )
             .filter(ham <= SIMHASH_HAMMING_MAX)
-            .select(F.col("b.doc_id").alias(self.id_col))
+            .select(F.col("b.doc_id").alias("doc_id"))
             .distinct()
         )
         return _admit_batch(self, batch_df, fp, rejected_ids, epoch_id)
@@ -718,7 +710,7 @@ class QualityGateSink(_EpochSink):
     fastText-style linear-classifier margin (``curation.qc_margin`` — the
     same inlined fixed-point arithmetic as the batch
     ``curate_quality_classifier``, so the streaming and batch decisions
-    cannot drift). Rows at or above ``threshold`` go to ``out``; the rest
+    cannot drift). Rows with a margin >= 0 go to ``out``; the rest
     land in ``quarantine`` WITH their margin — quarantined data is kept
     reviewable, never silently dropped (the JSONL-quarantine discipline
     applied to model-based filtering).
@@ -730,8 +722,6 @@ class QualityGateSink(_EpochSink):
     spark: SparkSession
     out_path: str
     quarantine_path: str
-    content_col: str = "text"
-    threshold: int = 0
     stats: dict = field(
         default_factory=lambda: {"batches": 0, "admitted": 0, "quarantined": 0}
     )
@@ -742,14 +732,14 @@ class QualityGateSink(_EpochSink):
 
         # COALESCE NULL content to '' exactly like the batch twin
         # (textops.SQL_TOK_NULLSAFE): NULL text then scores margin 0 and is
-        # ADMITTED at the default threshold in both engines
+        # ADMITTED in both engines
         scored = self._cache(
             batch_df.withColumn(
                 "margin",
-                qc_margin(ws_tokens(F.coalesce(F.col(self.content_col), F.lit("")))),
+                qc_margin(ws_tokens(F.coalesce(F.col("text"), F.lit("")))),
             )
         )
-        passes = F.col("margin") >= self.threshold
+        passes = F.col("margin") >= 0
         n_total, n_adm = scored.agg(
             F.count(F.lit(1)), F.count(F.when(passes, 1))
         ).first()
@@ -780,6 +770,8 @@ class _PairHistorySink(_EpochSink):
     (sources/batch.py: write_bucketed_table), zero-shuffle on the history
     side; the strict-epoch filter is partition pruning."""
 
+    id_col = "doc_id"
+
     def _epoch(self, batch_df: DataFrame, epoch_id: int) -> dict:
         from projet_pipeline_bigdata_org_spark.operators.dedup import (
             passage_hash_pair,
@@ -787,19 +779,14 @@ class _PairHistorySink(_EpochSink):
 
         batch_df = self._cache(batch_df)
         keys = self._cache(
-            batch_df.select(
-                F.col(self.id_col).alias("doc_id"),
-                F.explode(self._pieces()).alias("piece"),
-            ).select("doc_id", *passage_hash_pair(F.col("piece")))
+            batch_df.select("doc_id", F.explode(self._pieces()).alias("piece")).select(
+                "doc_id", *passage_hash_pair(F.col("piece"))
+            )
         )
         known = self._prior(
             f"{self.history_path}/{self._STORE}", "h1 long, h2 long", epoch_id
         ).distinct()
-        rejected_ids = (
-            keys.join(known, ["h1", "h2"])
-            .select(F.col("doc_id").alias(self.id_col))
-            .distinct()
-        )
+        rejected_ids = keys.join(known, ["h1", "h2"]).select("doc_id").distinct()
         return _admit_batch(self, batch_df, keys, rejected_ids, epoch_id)
 
     def _write_history(self, adm_keys: DataFrame, epoch_id: int) -> None:
@@ -827,8 +814,6 @@ class PassageHistoryDedupSink(_PairHistorySink):
     spark: SparkSession
     out_path: str
     history_path: str
-    content_col: str = "text"
-    id_col: str = "doc_id"
     stats: dict = field(
         default_factory=lambda: {"batches": 0, "admitted": 0, "rejected": 0}
     )
@@ -842,7 +827,7 @@ class PassageHistoryDedupSink(_PairHistorySink):
             ws_tokens,
         )
 
-        return F.array_distinct(shingles(ws_tokens(self.content_col), PASSAGE_TOKENS))
+        return F.array_distinct(shingles(ws_tokens("text"), PASSAGE_TOKENS))
 
 
 @dataclass
@@ -865,8 +850,6 @@ class BoilerplateHistoryDedupSink(_PairHistorySink):
     spark: SparkSession
     out_path: str
     history_path: str
-    content_col: str = "text"
-    id_col: str = "doc_id"
     stats: dict = field(
         default_factory=lambda: {"batches": 0, "admitted": 0, "rejected": 0}
     )
@@ -878,7 +861,7 @@ class BoilerplateHistoryDedupSink(_PairHistorySink):
             boilerplate_norm_lines,
         )
 
-        return boilerplate_norm_lines(F.col(self.content_col))
+        return boilerplate_norm_lines(F.col("text"))
 
 
 @dataclass
@@ -901,7 +884,7 @@ class SemDeDupHistorySink(_EpochSink):
        millionth (vec_id, dim, xs) rows — the representation every
        certified stage distances over;
     2. the codebook is derived from the prior history point store:
-       history ids under ``seed_max`` (a pure predicate — the same
+       history ids under ``IVFC_INC_SEED_MAX`` (a pure predicate — the same
        history-seeded rule as the batch twin). First epochs with no seed
        vectors admit everything (no index yet), exactly like an empty
        history table;
@@ -911,7 +894,7 @@ class SemDeDupHistorySink(_EpochSink):
        through the shared dot/ball stages;
     4. admitted rows go to ``out``; their POINTS to ``history/points``.
 
-    Scale shape: per epoch, codebook derivation reads seed_max ids'
+    Scale shape: per epoch, codebook derivation reads seed ids'
     points (partition- and predicate-prunable), assignment is one
     broadcast-agg pass, and pair work is cell-confined. The history
     ASSIGNMENT is recomputed per epoch here because the codebook can
@@ -923,12 +906,11 @@ class SemDeDupHistorySink(_EpochSink):
     spark: SparkSession
     out_path: str
     history_path: str
-    id_col: str = "vec_id"
-    embedding_col: str = "embedding"
-    seed_max: int | None = None  # default: similarity.IVFC_INC_SEED_MAX
     stats: dict = field(
         default_factory=lambda: {"batches": 0, "admitted": 0, "rejected": 0}
     )
+
+    id_col = "vec_id"
 
     def _epoch(self, batch_df: DataFrame, epoch_id: int) -> dict:
         from projet_pipeline_bigdata_org_spark.operators.similarity import (
@@ -941,20 +923,12 @@ class SemDeDupHistorySink(_EpochSink):
             ivfc_scaled_points,
         )
 
-        seed_max = IVFC_INC_SEED_MAX if self.seed_max is None else self.seed_max
         batch_df = self._cache(batch_df)
-        pts_b = self._cache(
-            ivfc_scaled_points(
-                batch_df.select(
-                    F.col(self.id_col).alias("vec_id"),
-                    F.col(self.embedding_col).alias("embedding"),
-                )
-            )
-        )
+        pts_b = self._cache(ivfc_scaled_points(batch_df.select("vec_id", "embedding")))
         pts_h = self._prior(
             f"{self.history_path}/points", "vec_id bigint, dim int, xs bigint", epoch_id
         )
-        cents = pts_h.filter(F.col("vec_id") < seed_max).select(
+        cents = pts_h.filter(F.col("vec_id") < IVFC_INC_SEED_MAX).select(
             F.col("vec_id").alias("cid"), "dim", F.col("xs").alias("cs")
         )
         assign_b = ivfc_argmin_cells(ivfc_cell_distances(pts_b, cents))
@@ -975,7 +949,7 @@ class SemDeDupHistorySink(_EpochSink):
             .join(nb, "b_id")
             .join(nh, "h_id")
             .filter(_semc_in_ball(SEMC_TAU))
-            .select(F.col("b_id").alias(self.id_col))
+            .select(F.col("b_id").alias("vec_id"))
             .distinct()
         )
         feat = pts_b.withColumnRenamed("vec_id", "doc_id")
@@ -997,8 +971,8 @@ class AnnPostingsSink(_FoldSink):
     points ADD across epochs), and the derived table per epoch is the
     POSTINGS SNAPSHOT of the index as of that epoch: every point seen so
     far assigned to the codebook under the batch twin's exact
-    history-seed predicate (ids < seed_max AND residue-history — a pure
-    predicate over the folded points, so a replayed or out-of-order
+    history-seed predicate (ids < IVFC_INC_SEED_MAX AND residue-history —
+    a pure predicate over the folded points, so a replayed or out-of-order
     epoch can never grow the codebook with shard ids). All arithmetic is
     the certified shared code (``ivfc_scaled_points`` /
     ``ivfc_cell_distances`` / ``ivfc_argmin_cells``), so the streamed
@@ -1014,9 +988,6 @@ class AnnPostingsSink(_FoldSink):
     spark: SparkSession
     out_path: str
     state_path: str
-    id_col: str = "vec_id"
-    embedding_col: str = "embedding"
-    seed_max: int | None = None  # default: similarity.IVFC_INC_SEED_MAX
     stats: dict = field(default_factory=lambda: {"batches": 0, "postings": 0})
 
     STATE_SCHEMA = "vec_id bigint, dim int, xs bigint"
@@ -1028,12 +999,7 @@ class AnnPostingsSink(_FoldSink):
             ivfc_scaled_points,
         )
 
-        return ivfc_scaled_points(
-            batch_df.select(
-                F.col(self.id_col).alias("vec_id"),
-                F.col(self.embedding_col).alias("embedding"),
-            )
-        )
+        return ivfc_scaled_points(batch_df.select("vec_id", "embedding"))
 
     def _merge(self, unioned: DataFrame) -> DataFrame:
         return unioned  # per-dim points simply accumulate across epochs
@@ -1046,9 +1012,8 @@ class AnnPostingsSink(_FoldSink):
             ivfc_cell_distances,
         )
 
-        seed_max = IVFC_INC_SEED_MAX if self.seed_max is None else self.seed_max
         cents = folded.filter(
-            (F.col("vec_id") < seed_max)
+            (F.col("vec_id") < IVFC_INC_SEED_MAX)
             & (F.col("vec_id") % 10 < EMB_BATCH_RESIDUE)
         ).select(F.col("vec_id").alias("cid"), "dim", F.col("xs").alias("cs"))
         return ivfc_argmin_cells(ivfc_cell_distances(folded, cents))
@@ -1175,8 +1140,6 @@ class KmvSketchSink(_FoldSink):
 
     spark: SparkSession
     sketch_path: str
-    content_col: str = "text"
-    lang_col: str = "lang"
     stats: dict = field(default_factory=lambda: {"batches": 0})
 
     STATE_SCHEMA = "lang string, h bigint"
@@ -1189,10 +1152,7 @@ class KmvSketchSink(_FoldSink):
         )
         from projet_pipeline_bigdata_org_spark.operators.textops import ws_tokens
 
-        toks = batch_df.select(
-            F.col(self.lang_col).alias("lang"),
-            F.explode(ws_tokens(self.content_col)).alias("tok"),
-        )
+        toks = batch_df.select("lang", F.explode(ws_tokens("text")).alias("tok"))
         return toks.unionByName(
             toks.select(F.lit("__all__").alias("lang"), "tok")
         ).select("lang", kmv_hash("tok"))
@@ -1240,7 +1200,6 @@ class CountMinSketchSink(_FoldSink):
 
     spark: SparkSession
     sketch_path: str
-    content_col: str = "text"
     stats: dict = field(default_factory=lambda: {"batches": 0})
 
     STATE_SCHEMA = "j int, bucket int, c bigint"
@@ -1253,9 +1212,8 @@ class CountMinSketchSink(_FoldSink):
         )
         from projet_pipeline_bigdata_org_spark.operators.textops import ws_tokens
 
-        return cm_sketch_counters(
-            batch_df.select(F.explode(ws_tokens(self.content_col)).alias("tok"))
-        )
+        tokens = F.explode(ws_tokens("text")).alias("tok")
+        return cm_sketch_counters(batch_df.select(tokens))
 
     def _merge(self, unioned: DataFrame) -> DataFrame:
         return unioned.groupBy("j", "bucket").agg(
@@ -1275,13 +1233,13 @@ def start_foreach_batch(
     sink: FailoverBatchSink,
     checkpoint_dir: str,
     trigger_seconds: int | None = None,
-    output_mode: str = "append",
 ):
-    """writeStream.foreachBatch with checkpointing (T1/T3/T6). Call
-    .processAllAvailable() / .awaitTermination() on the returned query."""
+    """writeStream.foreachBatch with checkpointing (T1/T3/T6), append
+    mode. Call .processAllAvailable() / .awaitTermination() on the
+    returned query."""
     writer = (
         df.writeStream.foreachBatch(sink)
-        .outputMode(output_mode)
+        .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
     )
     if trigger_seconds is not None:
@@ -1525,7 +1483,7 @@ class CurationFunnelSink(_EpochSink):
        records only admitted rows);
     2. c4_fail / gopher_fail — the rule columns, evaluated only for
        batch-unique non-historical rows by CASE precedence;
-    3. classifier_fail — absolute margin < threshold (the REGISTERED
+    3. classifier_fail — absolute margin < 0 (the REGISTERED
        ``curate_quality_classifier`` keep and QualityGateSink semantics;
        the batch ladder's corpus-RELATIVE margin rate needs the final
        corpus totals, which an ingest stream by definition does not have
@@ -1545,12 +1503,11 @@ class CurationFunnelSink(_EpochSink):
     out_path: str
     attributed_path: str
     history_path: str
-    content_col: str = "text"
-    id_col: str = "doc_id"
-    clf_threshold: int = 0
     stats: dict = field(
         default_factory=lambda: {"batches": 0, "admitted": 0, "removed": 0}
     )
+
+    id_col = "doc_id"
 
     def _epoch(self, batch_df: DataFrame, epoch_id: int) -> dict:
         from projet_pipeline_bigdata_org_spark.operators.curation import qc_margin
@@ -1560,12 +1517,12 @@ class CurationFunnelSink(_EpochSink):
             ws_tokens,
         )
 
-        text = F.coalesce(F.col(self.content_col), F.lit(""))
+        text = F.coalesce(F.col("text"), F.lit(""))
         stage = (
             F.when(F.col("__f_exact"), 1)
-            .when(~c4_keep_col(F.col(self.content_col)), 2)
-            .when(~gopher_keep_col(F.col(self.content_col)), 3)
-            .when(F.col("__margin") < self.clf_threshold, 4)
+            .when(~c4_keep_col(F.col("text")), 2)
+            .when(~gopher_keep_col(F.col("text")), 3)
+            .when(F.col("__margin") < 0, 4)
             .otherwise(0)
             .cast("long")
         )
@@ -1629,8 +1586,6 @@ class DecontaminationGateSink(_EpochSink):
     out_path: str
     flags_path: str
     bench_shingles: DataFrame  # one column `s`: the distinct dictionary
-    content_col: str = "text"
-    id_col: str = "doc_id"
     stats: dict = field(
         default_factory=lambda: {"batches": 0, "passed": 0, "contaminated": 0}
     )
@@ -1641,20 +1596,19 @@ class DecontaminationGateSink(_EpochSink):
             ws_tokens,
         )
 
-        text = F.coalesce(F.col(self.content_col), F.lit(""))
+        text = F.coalesce(F.col("text"), F.lit(""))
         sh = self._cache(
             batch_df.select(
-                F.col(self.id_col),
-                F.array_distinct(shingles(ws_tokens(text))).alias("sh"),
+                "doc_id", F.array_distinct(shingles(ws_tokens(text))).alias("sh")
             )
         )
-        flags = self._cache(_decontam_flags(sh, self.id_col, self.bench_shingles))
+        flags = self._cache(_decontam_flags(sh, "doc_id", self.bench_shingles))
         n_total, n_bad = flags.agg(
             F.count(F.lit(1)), F.count(F.when(F.col("contaminated"), 1))
         ).first()
         self._write(flags, self.flags_path, epoch_id)
-        passed = flags.filter(~F.col("contaminated")).select(self.id_col)
-        self._write(batch_df.join(passed, self.id_col), self.out_path, epoch_id)
+        passed = flags.filter(~F.col("contaminated")).select("doc_id")
+        self._write(batch_df.join(passed, "doc_id"), self.out_path, epoch_id)
         return {"passed": n_total - n_bad, "contaminated": n_bad}
 
 
@@ -1703,13 +1657,13 @@ class CurationFunnelIngestSink(_EpochSink):
        semantics (a doc near-duplicating a rejected doc is still a
        near-duplicate), which is exactly what makes the streamed
        attribution equal the one-shot twin's pair set;
-    3. decontaminated (rank 4) — benchmark members (``is_benchmark``,
-       default the corpus's doc_id % DECONTAM_BENCH_MOD == 0 stand-in)
-       are removed outright (eval data never trains), and other docs at
+    3. decontaminated (rank 4) — benchmark members (the corpus's
+       doc_id % DECONTAM_BENCH_MOD == 0 stand-in) are removed outright
+       (eval data never trains), and other docs at
        >= DECONTAM_PCT% shingle overlap with the STATIC broadcast
        benchmark dictionary (DecontaminationGateSink arithmetic);
     4. c4_fail / gopher_fail / classifier_fail (ranks 5/6/7) — the
-       drift-pinned rule columns, absolute classifier margin.
+       drift-pinned rule columns, absolute classifier margin < 0.
 
     Writes: survivors → ``out``; attribution (doc_id, stage_ord) →
     ``attributed``; first-seen keeper shas → ``history/shas``; their
@@ -1729,14 +1683,12 @@ class CurationFunnelIngestSink(_EpochSink):
     attributed_path: str
     history_path: str
     bench_shingles: DataFrame  # one column `s`: the static eval dictionary
-    content_col: str = "text"
-    id_col: str = "doc_id"
-    clf_threshold: int = 0
     portable: bool = False
-    is_benchmark: object | None = None  # Column predicate; None = id-mod rule
     stats: dict = field(
         default_factory=lambda: {"batches": 0, "admitted": 0, "removed": 0}
     )
+
+    id_col = "doc_id"
 
     def _epoch(self, batch_df: DataFrame, epoch_id: int) -> dict:
         from projet_pipeline_bigdata_org_spark.operators.curation import qc_margin
@@ -1755,8 +1707,8 @@ class CurationFunnelIngestSink(_EpochSink):
             ws_tokens,
         )
 
-        text = F.coalesce(F.col(self.content_col), F.lit(""))
-        did = F.col(self.id_col)
+        text = F.coalesce(F.col("text"), F.lit(""))
+        did = F.col("doc_id")
         sha_path = f"{self.history_path}/shas"
         base = self._cache(_exact_dup_flags(self, batch_df, text, sha_path, epoch_id))
         # one shingle/hash stage over this epoch's FIRST-SEEN keepers:
@@ -1794,18 +1746,13 @@ class CurationFunnelIngestSink(_EpochSink):
         contam = _decontam_flags(shc, "__did", self.bench_shingles).select(
             "__did", F.col("contaminated").alias("__contam")
         )
-        is_bench = (
-            did % DECONTAM_BENCH_MOD == 0
-            if self.is_benchmark is None
-            else self.is_benchmark
-        )
         stage = (
             F.when(F.col("__f_exact"), 1)
             .when(F.col("__near_id").isNotNull(), 3)
-            .when(is_bench | F.col("__contam"), 4)
-            .when(~c4_keep_col(F.col(self.content_col)), 5)
-            .when(~gopher_keep_col(F.col(self.content_col)), 6)
-            .when(F.col("__margin") < self.clf_threshold, 7)
+            .when((did % DECONTAM_BENCH_MOD == 0) | F.col("__contam"), 4)
+            .when(~c4_keep_col(F.col("text")), 5)
+            .when(~gopher_keep_col(F.col("text")), 6)
+            .when(F.col("__margin") < 0, 7)
             .otherwise(0)
             .cast("long")
         )

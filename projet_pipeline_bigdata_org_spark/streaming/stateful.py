@@ -6,9 +6,8 @@ operator updates (n_events, total_value, max_value) state per user_id and
 emits the updated snapshot — the arbitrary-state primitive that windowed
 aggs can't express (e.g. lifetime counters, per-key ML feature state).
 
-State is a single tuple per key (bounded by key cardinality, not event
-volume); timeout handling evicts idle users so state can't grow forever at
-stream scale.
+State is a single tuple per key, bounded by key cardinality, not event
+volume.
 
 Note: Spark 4's newer ``transformWithStateInPandas`` API is present but its
 Python state-server worker crashes in this container ("driver worker exited
@@ -44,59 +43,43 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _make_update_fn(idle_timeout_ms: int | None):
-    def update_user_state(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        """Per-key state update kernel: fold this batch's rows into the
-        running (count, sum, max) tuple and emit the new snapshot."""
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n, total, mx = state.get if state.exists else (0, 0.0, float("-inf"))
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            mx = max(mx, float(pdf["value"].max()))
-        state.update((n, total, mx))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total],
-                "max_value": [mx],
-            }
-        )
-
-    return update_user_state
+def _update_user_state(
+    key: tuple,
+    pdfs: Iterable[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    """Per-key state update kernel: fold this batch's rows into the
+    running (count, sum, max) tuple and emit the new snapshot."""
+    n, total, mx = state.get if state.exists else (0, 0.0, float("-inf"))
+    for pdf in pdfs:
+        n += len(pdf)
+        total += float(pdf["value"].sum())
+        mx = max(mx, float(pdf["value"].max()))
+    state.update((n, total, mx))
+    yield pd.DataFrame(
+        {
+            "user_id": [key[0]],
+            "n_events": [n],
+            "total_value": [total],
+            "max_value": [mx],
+        }
+    )
 
 
-def running_user_stats(
-    events: DataFrame, idle_timeout_ms: int | None = None
-) -> DataFrame:
+def running_user_stats(events: DataFrame) -> DataFrame:
     """Attach the stateful operator to a (streaming) events DataFrame.
 
-    ``idle_timeout_ms`` evicts idle keys (bounded state at stream scale).
-    Leave None under Trigger.AvailableNow: ProcessingTimeTimeout keeps the
-    query waiting to fire timeouts, so ``processAllAvailable`` never
-    returns (observed hang on Spark 4.1.2)."""
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
+    Keys never time out: a ``ProcessingTimeTimeout`` keeps the query
+    waiting to fire timeouts, so ``processAllAvailable`` never returns
+    under Trigger.AvailableNow (observed hang on Spark 4.1.2)."""
     return (
         events.select("user_id", "value")
         .groupBy("user_id")
         .applyInPandasWithState(
-            _make_update_fn(idle_timeout_ms),
+            _update_user_state,
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="update",
-            timeoutConf=timeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )

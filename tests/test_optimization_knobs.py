@@ -1,87 +1,101 @@
 """Optimization knobs: scale-safety behaviors that plan dumps can't pin —
-the size-derived shuffle-partition rule, the bounded spread_input guard,
-the scan-parts cache cap, the scoped-pin release discipline, the DISK_ONLY
-storage level of the corpus-sized pins, and the per-query driver overhead
-cuts (origin capture off, memoized table schemas).
+the session's performance confs and the rule that a deployment's own
+explicit confs win over them, the set of environment variables the package
+reads, the bounded spread_input guard, the scan-parts cache cap, the
+scoped-pin release discipline, the DISK_ONLY storage level of the
+corpus-sized pins, and the per-query driver overhead cuts (origin capture
+off, memoized table schemas).
 """
 
 from __future__ import annotations
 
-import logging
+import ast
+import pathlib
 import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 from pyspark import StorageLevel
 
+import projet_pipeline_bigdata_org_spark as pkg
 from projet_pipeline_bigdata_org_spark import catalog
 from projet_pipeline_bigdata_org_spark.operators import dedup
 from projet_pipeline_bigdata_org_spark.session import (
     DATAFRAME_DEBUGGING_CONF,
-    DEFAULT_SHUFFLE_PARTITIONS,
-    derive_shuffle_partitions,
+    PERF_CONFS,
+    ensure_runtime_confs,
 )
+
+#: every environment variable the package may read
+ALLOWED_ENV_VARS = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_STAGE_CACHE",
+    "PYTHON_WORKER_FACTORY_SECRET",
+}
 
 
 class TestDeriveShufflePartitions:
-    def test_small_input_floors_at_twice_cores(self):
-        # 1 GB on 32 cores: the size rule says 4 partitions; the floor
-        # keeps every core busy
-        assert derive_shuffle_partitions(1 << 30, 32) == 64
+    """The shuffle fan-out a session runs with: the engine's constant
+    default, unless the session already holds its own explicit value."""
 
-    def test_size_rule_in_the_100mb_1gb_band(self):
-        # 1 TB on 32 cores -> 4096 partitions of 256 MB each (guide §2.2)
-        assert derive_shuffle_partitions(1 << 40, 32) == 4096
+    def test_local_default_unchanged_without_env(self):
+        assert PERF_CONFS["spark.sql.shuffle.partitions"] == "32"
+        assert PERF_CONFS["spark.sql.files.maxPartitionBytes"] == str(4 * 1024 * 1024)
 
-    def test_100tb_is_capped_not_quadratic(self):
-        # 100 TB raw rule = ~400k partitions; the cap bounds the M x R
-        # shuffle block count (guide §2.2), AQE coalesces any overshoot
-        assert derive_shuffle_partitions(100 * (1 << 40), 512) == 1 << 17
+    def test_explicit_override_wins(self, spark):
+        parent_value = spark.conf.get("spark.sql.shuffle.partitions")
+        session = spark.newSession()
+        session.conf.set("spark.sql.shuffle.partitions", "7")
+        session.conf.set("spark.sql.session.timeZone", "America/New_York")
+        ensure_runtime_confs(session)
+        assert session.conf.get("spark.sql.shuffle.partitions") == "7"
+        # required confs are still forced, and unset perf confs applied
+        assert session.conf.get("spark.sql.session.timeZone") == "UTC"
+        assert session.conf.get("spark.sql.files.maxPartitionBytes") == str(4 * 1024 * 1024)
+        # the child session's explicit value does not leak to its parent
+        assert spark.conf.get("spark.sql.shuffle.partitions") == parent_value
 
-    def test_local_default_unchanged_without_env(self, monkeypatch):
-        monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
-        monkeypatch.delenv("SPARK_GRAFT_INPUT_BYTES", raising=False)
-        from projet_pipeline_bigdata_org_spark.session import _perf_confs
 
-        assert _perf_confs()["spark.sql.shuffle.partitions"] == str(
-            DEFAULT_SHUFFLE_PARTITIONS
+def _env_keys(tree: ast.AST) -> list:
+    """The first-argument / subscript / membership keys of every
+    ``os.environ`` and ``os.getenv`` use in ``tree``; a key that is not a
+    string literal is returned as its source text."""
+
+    def is_os(node, attr):
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == attr
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
         )
 
-    def test_input_bytes_env_drives_the_rule(self, monkeypatch):
-        monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
-        monkeypatch.setenv("SPARK_GRAFT_INPUT_BYTES", str(1 << 40))
-        monkeypatch.setenv("SPARK_GRAFT_TOTAL_CORES", "32")
-        from projet_pipeline_bigdata_org_spark.session import _perf_confs
+    keys = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and (
+            is_os(node.func, "getenv")
+            or (isinstance(node.func, ast.Attribute) and is_os(node.func.value, "environ"))
+        ):
+            keys.append(node.args[0] if node.args else node)
+        elif isinstance(node, ast.Subscript) and is_os(node.value, "environ"):
+            keys.append(node.slice)
+        elif isinstance(node, ast.Compare) and any(is_os(c, "environ") for c in node.comparators):
+            keys.append(node.left)
+        elif isinstance(node, ast.ImportFrom) and node.module == "os":
+            assert not {a.name for a in node.names} & {"environ", "getenv"}, ast.unparse(node)
+    return [k.value if isinstance(k, ast.Constant) else ast.unparse(k) for k in keys]
 
-        assert _perf_confs()["spark.sql.shuffle.partitions"] == "4096"
 
-    def test_explicit_override_wins(self, monkeypatch):
-        monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "777")
-        monkeypatch.setenv("SPARK_GRAFT_INPUT_BYTES", str(1 << 40))
-        from projet_pipeline_bigdata_org_spark.session import _perf_confs
-
-        assert _perf_confs()["spark.sql.shuffle.partitions"] == "777"
-
-    @pytest.mark.parametrize("raw", ["1e12", "100TB", "1_000000000000"])
-    def test_malformed_input_bytes_warns(self, monkeypatch, caplog, raw):
-        monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
-        monkeypatch.setenv("SPARK_GRAFT_INPUT_BYTES", raw)
-        from projet_pipeline_bigdata_org_spark.session import _perf_confs
-
-        with caplog.at_level(logging.WARNING, logger="projet_pipeline_bigdata_org_spark.session"):
-            parts = _perf_confs()["spark.sql.shuffle.partitions"]
-        assert parts == str(DEFAULT_SHUFFLE_PARTITIONS)
-        assert f"SPARK_GRAFT_INPUT_BYTES={raw!r}" in caplog.text
-
-    def test_plain_input_bytes_does_not_warn(self, monkeypatch, caplog):
-        monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
-        monkeypatch.setenv("SPARK_GRAFT_INPUT_BYTES", str(1 << 40))
-        from projet_pipeline_bigdata_org_spark.session import _perf_confs
-
-        with caplog.at_level(logging.WARNING, logger="projet_pipeline_bigdata_org_spark.session"):
-            _perf_confs()
-        assert "SPARK_GRAFT_INPUT_BYTES" not in caplog.text
+def test_package_reads_only_the_allowed_env_vars():
+    """Deployment tuning goes through Spark's own confs; a new environment
+    variable in the package is a knob nothing sets."""
+    root = pathlib.Path(pkg.__file__).parent
+    found = {
+        key
+        for path in root.rglob("*.py")
+        for key in _env_keys(ast.parse(path.read_text(), str(path)))
+    }
+    assert found == ALLOWED_ENV_VARS
 
 
 class TestSpreadInputGuard:

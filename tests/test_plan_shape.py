@@ -398,29 +398,14 @@ def test_mix_temperature_broadcasts_thresholds(spark, sf_dir):
     assert p.count("Exchange hashpartitioning") <= 2, p
 
 
-def test_pack_shard_fanout_tracks_config(spark, sf_dir, monkeypatch):
-    """N_SHARDS is configuration, not a constant: it follows
-    $SPARK_GRAFT_PACK_SHARDS (else the engine's shuffle fan-out), and the
-    shard layout actually changes with it — the registered default must
-    produce more distinct shards than the old hard-coded 8 ever could."""
-    import os
-
+def test_pack_shard_fanout_tracks_config(spark, sf_dir):
+    """N_SHARDS follows the engine's shuffle fan-out, and the shard layout
+    actually has that many shards — the registered default must produce
+    more distinct shards than the old hard-coded 8 ever could."""
     from projet_pipeline_bigdata_org_spark.operators import packing
     from projet_pipeline_bigdata_org_spark.session import DEFAULT_SHUFFLE_PARTITIONS
 
-    # N_SHARDS froze at module import from whatever the env held THEN —
-    # compare against that resolution, not a bare DEFAULT, so a session
-    # started with $SPARK_GRAFT_PACK_SHARDS already set still passes
-    # (monkeypatch cannot undo import-time state)
-    import_env = os.environ.get("SPARK_GRAFT_PACK_SHARDS")
-    expected = max(1, int(import_env)) if import_env else DEFAULT_SHUFFLE_PARTITIONS
-    assert packing.N_SHARDS == expected
-    monkeypatch.delenv("SPARK_GRAFT_PACK_SHARDS", raising=False)
-    assert packing.resolve_shards() == DEFAULT_SHUFFLE_PARTITIONS
-    monkeypatch.setenv("SPARK_GRAFT_PACK_SHARDS", "96")
-    assert packing.resolve_shards() == 96
-    # the engine default beats the old hard-coded 8-shard fan-out
-    assert DEFAULT_SHUFFLE_PARTITIONS > 8
+    assert packing.N_SHARDS == DEFAULT_SHUFFLE_PARTITIONS > 8
     df = _Q["pack_sequences"].fn(spark, sf_dir)
     n_shards = df.select("shard").distinct().count()
     assert n_shards == packing.N_SHARDS, (

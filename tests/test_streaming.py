@@ -240,6 +240,28 @@ def test_failover_sink_skips_empty_batch(spark, tmp_path):
     assert not list(tmp_path.glob("**/epoch=*"))
 
 
+
+def test_failover_sink_replayed_epoch_counts_once(spark, tmp_path):
+    """A checkpoint restart may replay an epoch: rows_written, failover and
+    dropped are kept per epoch, so the replay replaces its own entry;
+    batches counts calls."""
+    batch = _mk_events(spark, [(1, 0, 1, "view", 1), (2, 1, 2, "click", 2)])
+    sink = FailoverBatchSink(primary=idempotent_parquet_batch_writer(str(tmp_path / "out")))
+    sink(batch, 7)
+    sink(batch, 7)
+    assert sink.stats == {
+        "batches": 2, "empty": 0, "failover": 0, "dropped": 0, "rows_written": 2
+    }
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 2
+
+    def boom(df, epoch):
+        raise RuntimeError("down")
+
+    dropping = FailoverBatchSink(primary=boom)
+    dropping(batch, 3)
+    dropping(batch, 3)
+    assert dropping.stats["failover"] == 1 and dropping.stats["dropped"] == 1
+
 def test_session_window_streaming_matches_batch(spark, tmp_path):
     """The same session_window expression runs under readStream and merges
     sessions across micro-batches via the state store."""
