@@ -230,6 +230,18 @@ def stage_tables(
     return stage_result(spark, f"tables:{stage}", sf_dir, build)
 
 
+def checkpoint_round(df: DataFrame) -> DataFrame:
+    """Eagerly materialize one round of an iterative operator and cut its
+    lineage, so round ``r`` does not re-plan rounds ``0..r-1``. With a
+    checkpoint dir configured the round is written there (``checkpoint``:
+    executor loss mid-iteration replays from durable storage); without
+    one it stays executor-local (``localCheckpoint``, the local-mode
+    choice)."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
 #: where stage_tables materializes; per-application subdirs keep runs apart
 STAGE_CACHE_ROOT = os.environ.get(
     "SPARK_GRAFT_STAGE_CACHE", "/tmp/spark_graft_stage_cache"

@@ -44,20 +44,21 @@ from projet_pipeline_bigdata_org_spark.functions.cleaning import (
 from projet_pipeline_bigdata_org_spark.plans.registry import query
 
 SEED = 42  # reference model_training.py:149,171,246
+#: fixed hyperparameters; PipelineConfig holds the ones the tests shrink
+W2V_MIN_COUNT = 2
+W2V_MAX_ITER = 2
+MIN_DF = 2
+NUM_TOPICS = 6
+MAX_DEPTH = 5
+LABEL_COL = "label"
 
 
 @dataclass(frozen=True)
 class PipelineConfig:
     vector_size: int = 32
-    w2v_min_count: int = 2
-    w2v_max_iter: int = 2
     vocab_size: int = 512
-    min_df: int = 2
-    num_topics: int = 6
     lda_max_iter: int = 5
     num_trees: int = 10
-    max_depth: int = 5
-    label_col: str = "label"
 
 
 def build_feature_pipeline(cfg: PipelineConfig = PipelineConfig()) -> Pipeline:
@@ -74,20 +75,20 @@ def build_feature_pipeline(cfg: PipelineConfig = PipelineConfig()) -> Pipeline:
         inputCol="filtered_words",
         outputCol="word2vec_features",
         vectorSize=cfg.vector_size,
-        minCount=cfg.w2v_min_count,
-        maxIter=cfg.w2v_max_iter,
+        minCount=W2V_MIN_COUNT,
+        maxIter=W2V_MAX_ITER,
         seed=SEED,
     )
     cv = CountVectorizer(
         inputCol="filtered_words",
         outputCol="features_lda",
         vocabSize=cfg.vocab_size,
-        minDF=cfg.min_df,
+        minDF=MIN_DF,
     )
     lda = LDA(
         featuresCol="features_lda",
         topicDistributionCol="topic_distribution",
-        k=cfg.num_topics,
+        k=NUM_TOPICS,
         maxIter=cfg.lda_max_iter,
         seed=SEED,
         optimizer="online",
@@ -102,10 +103,10 @@ def build_feature_pipeline(cfg: PipelineConfig = PipelineConfig()) -> Pipeline:
     )
     rf = RandomForestRegressor(
         featuresCol="features_regression",
-        labelCol=cfg.label_col,
+        labelCol=LABEL_COL,
         predictionCol="prediction",
         numTrees=cfg.num_trees,
-        maxDepth=cfg.max_depth,
+        maxDepth=MAX_DEPTH,
         seed=SEED,
     )
     return Pipeline(stages=[tokenizer, stop, w2v, cv, lda, indexer, assembler, rf])
@@ -118,7 +119,7 @@ def prepare_documents(df: DataFrame) -> DataFrame:
         "doc_id",
         "lang",
         clean_text("text").alias("clean"),
-        F.ln("n_chars").alias("label"),
+        F.ln("n_chars").alias(LABEL_COL),
     ).filter(F.length("clean") > 0)
 
 

@@ -531,28 +531,38 @@ def sql_collect_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 RANGE_RADIUS = 100
 
 
-@query(
-    "range_join_bucketized",
-    oracle=f"""
+_RANGE_JOIN_ORACLE = f"""
     SELECT s_suppkey, s_name, COUNT(*) AS n_close_customers
     FROM supplier JOIN customer
       ON c_acctbal BETWEEN s_acctbal - {RANGE_RADIUS} AND s_acctbal + {RANGE_RADIUS}
     GROUP BY s_suppkey, s_name
-    """,
+    """
+
+
+@query(
+    "join_nonequi_range",
+    oracle=_RANGE_JOIN_ORACLE,
+    tags=("join", "relational"),
+)
+@query(
+    "range_join_bucketized",
+    oracle=_RANGE_JOIN_ORACLE,
     tags=("join", "relational", "range"),
 )
 def range_join_bucketized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range join as a BUCKETIZED EQUI-JOIN — the shuffle-scalable plan for
-    join_nonequi_range's semantics (same oracle, different physical shape).
+    """Theta/range join (customers within ±RANGE_RADIUS of each supplier's
+    balance) as a BUCKETIZED EQUI-JOIN, so neither side has to be
+    broadcastable. ``join_nonequi_range`` is the same builder under a
+    second name.
 
     Each side maps its value to width-RANGE_RADIUS buckets: a customer to
     floor(bal/W); a supplier to its bucket and both neighbors (any pair
     within ±W differs by at most one bucket). The join becomes an equi-join
     on the bucket key — hash-partitionable, AQE-skew-splittable — followed
     by the exact BETWEEN filter; no pair is double-counted because the
-    customer bucket is unique. At 100 TB this replaces the
-    BroadcastNestedLoopJoin (which requires one side to fit in memory) with
-    an ordinary shuffle whose fan-out is 3x the small side."""
+    customer bucket is unique. Unlike a BroadcastNestedLoopJoin, which
+    needs one side to fit in memory, this is an ordinary shuffle whose
+    fan-out is 3x the small side."""
     s = load(spark, sf_dir, "supplier")
     c = load(spark, sf_dir, "customer")
     w = float(RANGE_RADIUS)

@@ -15,7 +15,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from projet_pipeline_bigdata_org_spark.catalog import load
+from projet_pipeline_bigdata_org_spark.catalog import checkpoint_round, load
 from projet_pipeline_bigdata_org_spark.functions.hashing import hash_coin, sql_hash_coin
 from projet_pipeline_bigdata_org_spark.plans.registry import query
 
@@ -90,117 +90,106 @@ def grouped_agg_value_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MAX_CC_ITERATIONS = 20
+#: round cap of connected_components; rounds grow with log(diameter)
+STAR_MAX_ROUNDS = 50
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = MAX_CC_ITERATIONS,
-    reliable_checkpoint: bool | None = None,
-    fallback_to_star: bool = True,
-) -> DataFrame:
-    """Min-label propagation over an undirected edge list (a_id, b_id) →
-    (node, cluster_id = min reachable id). Iterates until fixpoint.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components of an undirected edge list (a_id, b_id) →
+    (node, cluster_id = min reachable id), via alternating large-star /
+    small-star rounds (Kiveris et al., "Connected Components in MapReduce
+    and Beyond", SoCC 2014): rounds needed grow with log(diameter), so
+    long chains (the worst case for dedup graphs with transitive near-dup
+    paths) converge in a handful of shuffles.
 
-    Each round: node label ← min(own label, neighbors' labels) — two
-    shuffles per round (propagate + re-aggregate); rounds ≈ graph diameter
-    of the largest near-dup cluster, which is tiny in practice. The at-scale
-    refinement is the large-star/small-star variant; the dataflow shape (no
-    driver-side graph, only joins/aggregations) is identical.
+    large-star: every node u computes m = min(Γ(u) ∪ {u}) and re-points
+    its LARGER neighbors at m; small-star orients edges (large, small) and
+    re-points the smaller neighborhood (plus u itself) at its minimum.
+    Both are one groupBy + one join on the node key. At the fixpoint the
+    edge set is the star forest {(node, component_min)}. Self-loops carry
+    no connectivity and are dropped, so a node seen only in (x, x) edges
+    is not in the output.
 
-    Fault/scale posture: the convergence check rides the SAME materialization
-    as the per-round checkpoint — the round's labels carry a ``changed`` flag
-    computed in the update join itself, so detecting the fixpoint is a scan
-    of the just-checkpointed partitions, not a second join recompute.
-    Checkpointing is reliable (``df.checkpoint()`` → HDFS/object store) when
-    a checkpoint dir is configured — executor loss mid-iteration then replays
-    from durable storage; ``localCheckpoint`` (executor-local, faster) is the
-    fallback and the right choice in local mode. Override via
-    ``reliable_checkpoint=True/False``.
+    Every round is materialized by ``catalog.checkpoint_round`` (durable
+    when a checkpoint dir is configured, executor-local otherwise).
 
-    Convergence guard: min-label needs ~diameter rounds, so a component whose
-    diameter exceeds ``max_iter`` cannot converge here. Rather than failing
-    the pipeline, the non-converged case falls back to the
-    large-star/small-star variant (O(log diameter) rounds) and returns its
-    result — same contract, proven equivalent in tests. Set
-    ``fallback_to_star=False`` to get the original RuntimeError instead."""
-    sc = edges.sparkSession.sparkContext
-    if reliable_checkpoint is None:
-        reliable_checkpoint = sc.getCheckpointDir() is not None
+    Convergence: a count + xxhash64-sum checksum of the canonical edge set
+    per round (single aggregate on the just-checkpointed edges) flags a
+    CANDIDATE fixpoint; an exact ``exceptAll(...).isEmpty()`` probe then
+    confirms it — the extra join runs only on the final round, so the
+    operator is exact (no hash-coincidence early stop) at the cost of one
+    join per full run, not per round."""
 
-    def _checkpoint(df: DataFrame) -> DataFrame:
-        # cut the growing lineage every round either way
-        return df.checkpoint(eager=True) if reliable_checkpoint else df.localCheckpoint(
-            eager=True
+    def _checksum(df: DataFrame) -> tuple:
+        # hash residues bounded to 2^40 so the sum stays exact in int64
+        # under ANSI for any realistic edge count (2^23 edges × 2^40 < 2^63)
+        row = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1 << 40))).alias("h"),
+        ).collect()[0]
+        return (row.n, row.h)
+
+    def large_star(cur: DataFrame) -> DataFrame:
+        adj = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        mins = adj.groupBy("u").agg(
+            F.least(F.min("v"), F.first("u")).alias("m")
+        )
+        return (
+            adj.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
         )
 
-    # symmetrize in ONE pass over the (possibly expensive) input subtree —
-    # explode, not union-of-projections — and checkpoint the adjacency once:
-    # every round's neighbor_min joins adj, so an unmaterialized adj would
-    # re-derive the upstream pair generation 2x per iteration at any scale.
-    # Checkpoint it HASH-PARTITIONED ON dst (the per-round join key): the
-    # checkpointed relation keeps that partitioning, so each round shuffles
-    # only the |nodes|-row label table — the |E|-row adjacency exchanges
-    # once at build instead of once per round (measured 4.60 -> 3.57 s on
-    # dedup_cluster_components at sf0.1; the saving is ~diameter full edge
-    # shuffles at cluster scale)
-    adj = _checkpoint(
+    def small_star(cur: DataFrame) -> DataFrame:
+        oriented = cur.select(
+            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+        )
+        mins = oriented.groupBy("u").agg(
+            F.least(F.min("v"), F.first("u")).alias("m")
+        )
+        joined = oriented.join(mins, "u")
+        repointed = joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
+        self_edges = mins.select(F.col("u"), F.col("m").alias("v"))
+        return (
+            repointed.union(self_edges)
+            .filter(F.col("u") != F.col("v"))
+            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+            .distinct()
+        )
+
+    # canonical undirected edges: (larger, smaller), self-loops dropped
+    e = checkpoint_round(
         edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a_id").alias("src"), F.col("b_id").alias("dst")),
-                    F.struct(F.col("b_id").alias("src"), F.col("a_id").alias("dst")),
-                )
-            ).alias("e")
+            F.greatest("a_id", "b_id").alias("u"), F.least("a_id", "b_id").alias("v")
         )
-        .select("e.src", "e.dst")
-        .repartition("dst")
-    )
-    labels = (
-        adj.select(F.col("src").alias("node"))
+        .filter(F.col("u") != F.col("v"))
         .distinct()
-        .withColumn("cluster_id", F.col("node"))
     )
-
-    changed = -1
-    for _ in range(max_iter):
-        neighbor_min = (
-            adj.join(labels, adj.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        updated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("nbr_min", F.col("cluster_id"))
-                ).alias("new_cluster_id"),
-                (F.coalesce("nbr_min", F.col("cluster_id")) < F.col("cluster_id")).alias(
-                    "changed"
-                ),
-            )
-            .select(
-                "node", F.col("new_cluster_id").alias("cluster_id"), "changed"
-            )
-        )
-        materialized = _checkpoint(updated)  # one job materializes the round
-        # fixpoint probe scans the checkpointed partitions only (no recompute)
-        changed = materialized.filter("changed").limit(1).count()
-        labels = materialized.drop("changed")
-        if changed == 0:
+    prev_sum = _checksum(e)
+    converged = False
+    for _ in range(STAR_MAX_ROUNDS):
+        prev_e = e
+        e = checkpoint_round(small_star(large_star(e)))
+        cur_sum = _checksum(e)
+        # checksum match → candidate fixpoint; confirm with an exact
+        # set-compare (equal counts + empty difference ⟺ equal sets; both
+        # sides are distinct canonical edges). Runs only on the final round.
+        if cur_sum == prev_sum and e.exceptAll(prev_e).isEmpty():
+            converged = True
             break
-    if changed != 0:
-        if fallback_to_star:
-            return connected_components_star(
-                edges, reliable_checkpoint=reliable_checkpoint
-            )
+        prev_sum = cur_sum
+    if not converged:
         raise RuntimeError(
-            f"connected_components did not converge within {max_iter} iterations "
-            "(component diameter exceeds max_iter); raise max_iter or switch to "
-            "the large-star/small-star variant"
+            f"connected_components did not converge within {STAR_MAX_ROUNDS} rounds"
         )
-    return labels
+    # fixpoint edge set is (node > center) pairs; centers label themselves
+    labels = e.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
+    centers = e.select(F.col("v").alias("node")).distinct().withColumn(
+        "cluster_id", F.col("node")
+    )
+    return labels.union(centers).distinct()
 
 
 from projet_pipeline_bigdata_org_spark.operators.dedup import (
@@ -239,24 +228,34 @@ SQL_CC_LABELS = f"""
 """
 
 
-@query(
-    "dedup_cluster_components",
-    oracle=f"""
+_SQL_CC_ORACLE = f"""
     WITH RECURSIVE {SQL_CC_LABELS}
     SELECT node, cluster_id FROM labels
-    """,
+    """
+
+
+@query(
+    "dedup_cluster_components",
+    oracle=_SQL_CC_ORACLE,
+    tags=("llm", "dedup", "iterative", "documents"),
+)
+@query(
+    "star_cluster_components",
+    oracle=_SQL_CC_ORACLE,
     tags=("llm", "dedup", "iterative", "documents"),
 )
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clustering: exact-Jaccard pairs → connected components via
-    iterative min-label propagation (the oracle computes the same transitive
-    closure with a recursive CTE). Output: every node in the pair graph with
-    its cluster representative (min doc_id)."""
+    """Near-dup clustering: exact-Jaccard pairs → large-star/small-star
+    connected components (the oracle computes the same transitive closure
+    with a recursive CTE). Output: every node in the pair graph with its
+    cluster representative (min doc_id). ``star_cluster_components`` is the
+    same builder under a second name."""
     from projet_pipeline_bigdata_org_spark.operators.dedup import dedup_ngram_jaccard
 
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("a_id", "b_id")
     return connected_components(pairs).select(
-        "node", F.col("cluster_id").cast("long").alias("cluster_id")
+        F.col("node").cast("long").alias("node"),
+        F.col("cluster_id").cast("long").alias("cluster_id"),
     )
 
 
@@ -326,151 +325,6 @@ def agg_approximate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.approx_count_distinct("l_partkey").alias("approx_parts"),
         F.percentile_approx("l_extendedprice", 0.5, 1000).alias("approx_median_price"),
         F.count(F.lit(1)).alias("n"),
-    )
-
-
-def _symmetric(edges: DataFrame) -> DataFrame:
-    # one pass over the input subtree (explode), not a union of two
-    # projections that would each re-derive it
-    return (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a_id").alias("u"), F.col("b_id").alias("v")),
-                    F.struct(F.col("b_id").alias("u"), F.col("a_id").alias("v")),
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-#: round cap of connected_components_star; rounds grow with log(diameter)
-STAR_MAX_ROUNDS = 50
-
-
-def connected_components_star(
-    edges: DataFrame, reliable_checkpoint: bool | None = None
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the at-scale alternative to plain min-label propagation: rounds needed
-    grow with log(diameter) rather than diameter, so long chains (the
-    worst case for dedup graphs with transitive near-dup paths) converge
-    in a handful of shuffles.
-
-    large-star: every node u computes m = min(Γ(u) ∪ {u}) and re-points
-    its LARGER neighbors at m; small-star orients edges (large, small) and
-    re-points the smaller neighborhood (plus u itself) at its minimum.
-    Both are one groupBy + one join on the node key. At the fixpoint the
-    edge set is the star forest {(node, component_min)}.
-
-    Convergence: a count + xxhash64-sum checksum of the canonical edge set
-    per round (single aggregate on the just-checkpointed edges) flags a
-    CANDIDATE fixpoint; an exact ``exceptAll(...).isEmpty()`` probe then
-    confirms it — the extra join runs only on the final round, so the
-    operator is exact (no hash-coincidence early stop) at the cost of one
-    join per full run, not per round."""
-    e = _symmetric(edges).select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).distinct()
-    sc = edges.sparkSession.sparkContext
-    if reliable_checkpoint is None:
-        reliable_checkpoint = sc.getCheckpointDir() is not None
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable_checkpoint else df.localCheckpoint(
-            eager=True
-        )
-
-    def _checksum(df: DataFrame) -> tuple:
-        # hash residues bounded to 2^40 so the sum stays exact in int64
-        # under ANSI for any realistic edge count (2^23 edges × 2^40 < 2^63)
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1 << 40))).alias("h"),
-        ).collect()[0]
-        return (row.n, row.h)
-
-    def large_star(cur: DataFrame) -> DataFrame:
-        adj = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = adj.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        return (
-            adj.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def small_star(cur: DataFrame) -> DataFrame:
-        oriented = cur.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mins = oriented.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        joined = oriented.join(mins, "u")
-        repointed = joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
-        self_edges = mins.select(F.col("u"), F.col("m").alias("v"))
-        return (
-            repointed.union(self_edges)
-            .filter(F.col("u") != F.col("v"))
-            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .distinct()
-        )
-
-    e = _ckpt(e)
-    prev_sum = _checksum(e)
-    converged = False
-    for _ in range(STAR_MAX_ROUNDS):
-        prev_e = e
-        e = _ckpt(small_star(large_star(e)))
-        cur_sum = _checksum(e)
-        # checksum match → candidate fixpoint; confirm with an exact
-        # set-compare (equal counts + empty difference ⟺ equal sets; both
-        # sides are distinct canonical edges). Runs only on the final round.
-        if cur_sum == prev_sum and e.exceptAll(prev_e).isEmpty():
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge within {STAR_MAX_ROUNDS} rounds"
-        )
-    # fixpoint edge set is (node > center) pairs; centers label themselves
-    labels = e.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
-    centers = e.select(F.col("v").alias("node")).distinct().withColumn(
-        "cluster_id", F.col("node")
-    )
-    return labels.union(centers).distinct()
-
-
-@query(
-    "star_cluster_components",
-    # identical oracle to dedup_cluster_components: two independent Spark
-    # implementations (min-label propagation vs large/small-star), one truth
-    oracle=f"""
-    WITH RECURSIVE {SQL_CC_LABELS}
-    SELECT node, cluster_id FROM labels
-    """,
-    tags=("llm", "dedup", "iterative", "documents"),
-)
-def star_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clustering via large-star/small-star connected components —
-    same contract as dedup_cluster_components, O(log diameter) rounds
-    instead of O(diameter): the variant to reach for when near-dup chains
-    get long at corpus scale."""
-    from projet_pipeline_bigdata_org_spark.operators.dedup import dedup_ngram_jaccard
-
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("a_id", "b_id")
-    return connected_components_star(pairs).select(
-        F.col("node").cast("long").alias("node"),
-        F.col("cluster_id").cast("long").alias("cluster_id"),
     )
 
 

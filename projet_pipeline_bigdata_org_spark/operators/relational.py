@@ -459,32 +459,6 @@ def join_broadcast_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "join_nonequi_range",
-    oracle="""
-    SELECT s_suppkey, s_name, COUNT(*) AS n_close_customers
-    FROM supplier JOIN customer
-      ON c_acctbal BETWEEN s_acctbal - 100 AND s_acctbal + 100
-    GROUP BY s_suppkey, s_name
-    """,
-    tags=("join", "relational"),
-)
-def join_nonequi_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theta/range join (BroadcastNestedLoop with the small side broadcast).
-
-    Scale: the supplier side is tiny → broadcast; at 100 TB one would
-    bucketize c_acctbal and turn this into an equi-join on bucket + filter
-    (see operators/similarity.py for that pattern on embeddings)."""
-    s = load(spark, sf_dir, "supplier")
-    c = load(spark, sf_dir, "customer")
-    cond = c.c_acctbal.between(s.s_acctbal - 100, s.s_acctbal + 100)
-    return (
-        c.join(F.broadcast(s), cond)
-        .groupBy("s_suppkey", "s_name")
-        .agg(F.count(F.lit(1)).alias("n_close_customers"))
-    )
-
-
-@query(
     "join_cross_region_nation",
     oracle="""
     SELECT r_name, COUNT(*) AS n_pairs

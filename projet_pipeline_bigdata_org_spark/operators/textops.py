@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from projet_pipeline_bigdata_org_spark.catalog import load
+from projet_pipeline_bigdata_org_spark.catalog import checkpoint_round, load
 from projet_pipeline_bigdata_org_spark.functions.cleaning import STOPWORDS
 from projet_pipeline_bigdata_org_spark.plans.registry import query
 
@@ -904,12 +904,11 @@ _GOPREP_ORACLE = f"""
 
 
 def _goprep_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """corpus + fixture riders → (doc_id, toks, lines) — the shared input
-    stage of both Gopher-repetition forms (null-safe tokenization on both
+    """corpus + fixture riders → (doc_id, toks, lines) — the input stage
+    of the Gopher-repetition query (null-safe tokenization on both
     sides, ADVICE r15). The local single-row-group scan is spread before
-    the per-document n-gram arithmetic (r17, guide §2.5 input-skew
-    remedy — no-op on multi-split production inputs), so the O(k²)
-    array-local form and the exploded form's gram generation use every
+    the per-document n-gram generation (r17, guide §2.5 input-skew
+    remedy — no-op on multi-split production inputs), so it uses every
     core instead of the scan's one task."""
     from projet_pipeline_bigdata_org_spark.catalog import spread_input
 
@@ -958,7 +957,12 @@ def _arr_chars(col: Column) -> Column:
     oracle=_GOPREP_ORACLE,
     tags=("llm", "text", "quality", "documents"),
 )
-def text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query(
+    "lex_gopher_repetition_exploded",
+    oracle=_GOPREP_ORACLE,
+    tags=("llm", "text", "quality", "documents"),
+)
+def text_gopher_repetition_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher REPETITION rules (Rae et al. 2021 §A1.1's second half —
     ``lex_gopher_rules`` covers the quality half): thresholded
     duplicate-line fraction, duplicate-line CHARACTER fraction, top
@@ -968,159 +972,19 @@ def text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     position counted once however many duplicated grams cover it).
     Every comparison is an exact integer cross-multiplication in
     per-mille; the per-mille report columns are DIV-truncated integers.
+    ``lex_gopher_repetition_exploded`` is the same builder under a
+    second name.
 
     Fixture riders (``GOPREP_FIXTURE_ROWS``, both engines) exercise the
     two LINE rules both ways — the corpus is single-line; the n-gram
     rules split the REAL corpus at every SF (probed: top-2-gram p99
     ~220‰ against the 200‰ threshold, dup-2-gram coverage p90 ~230‰).
 
-    Scale shape: ENTIRELY array-local higher-order arithmetic — zero
-    shuffle, zero explode (plan-pinned): the work is embarrassingly
-    per-row, so it scales linearly with the corpus and never exchanges.
-    The within-array counting is O(k²) per document (k = token count,
-    <= 99 here) through partially-interpreted lambda expressions
-    (~1.4 ms/doc at sf0.1 — cheap in absolute terms but a heavier
-    per-row constant than lex_c4_rules' regex pack); for long-document
-    corpora use ``lex_gopher_repetition_exploded`` — the registered
-    explode + groupBy production twin (VERDICT r15 #3), equality-tested
-    against this form — the thresholds and flags are
-    representation-independent."""
-    t = _goprep_stage(spark, sf_dir)
-    g = t.select(
-        "doc_id", "toks", "lines",
-        _goprep_grams(2).alias("g2"),
-        _goprep_grams(3).alias("g3"),
-        _goprep_grams(4).alias("g4"),
-    )
-
-    def counts(col: str) -> F.Column:
-        return F.transform(
-            F.col(col),
-            lambda x: F.size(F.filter(F.col(col), lambda y: y == x)),
-        )
-
-    # ONE O(k²) counting pass per n (r17, guide §1.2 "per-task work"):
-    # the previous form recomputed `counts` inside cmax AND re-filtered
-    # with a nested count inside top_mass — 7 quadratic passes per row;
-    # cmax and the top gram now derive from the materialized c{n} column
-    # (array_max + an O(k) zip_with mask), 3 quadratic passes total.
-    # Values are unchanged: cmax is the max of the same counts, and the
-    # top gram is the same min over grams whose count equals cmax.
-    c = g.select(
-        "doc_id", "toks", "lines", "g2", "g3", "g4",
-        counts("g2").alias("c2"),
-        counts("g3").alias("c3"),
-        counts("g4").alias("c4"),
-    ).select(
-        "*",
-        F.coalesce(F.array_max("c2"), F.lit(0)).alias("g2cmax"),
-        F.coalesce(F.array_max("c3"), F.lit(0)).alias("g3cmax"),
-        F.coalesce(F.array_max("c4"), F.lit(0)).alias("g4cmax"),
-    )
-
-    chars = _arr_chars
-
-    def top_mass(n: int) -> F.Column:
-        gc, cm = F.col(f"g{n}"), F.col(f"g{n}cmax")
-        top = F.array_min(
-            F.zip_with(
-                gc, F.col(f"c{n}"), lambda gram, cnt: F.when(cnt == cm, gram)
-            )
-        )
-        return (
-            F.when(
-                (F.size(gc) > 0) & (cm >= 2),
-                cm.cast("long") * (F.length(top).cast("long") - (n - 1)),
-            )
-            .otherwise(F.lit(0).cast("long"))
-        )
-
-    ntoks = F.size(F.col("toks"))
-    positions = F.when(ntoks >= 1, F.sequence(F.lit(0), ntoks - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    covered = F.coalesce(
-        F.aggregate(
-            F.transform(
-                positions,
-                lambda p: F.when(
-                    ((p <= ntoks - 2) & (F.get(F.col("c2"), p) >= 2))
-                    | ((p >= 1) & (F.get(F.col("c2"), p - 1) >= 2)),
-                    F.length(F.get(F.col("toks"), p)).cast("long"),
-                ).otherwise(F.lit(0).cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda a, b: a + b,
-        ),
-        F.lit(0).cast("long"),
-    )
-    m = c.select(
-        "doc_id",
-        chars(F.col("toks")).alias("total_chars"),
-        F.size("lines").cast("long").alias("n_lines"),
-        F.size(F.array_distinct("lines")).cast("long").alias("n_distinct_lines"),
-        chars(F.col("lines")).alias("line_chars"),
-        chars(F.array_distinct("lines")).alias("distinct_line_chars"),
-        top_mass(2).alias("top2_mass"),
-        top_mass(3).alias("top3_mass"),
-        top_mass(4).alias("top4_mass"),
-        covered.alias("dup2_cov_chars"),
-    )
-    return _goprep_finalize(m)
-
-
-def _goprep_finalize(m: DataFrame) -> DataFrame:
-    """Per-mille flags + keep from the metric stage (shared by the
-    array-local and exploded Gopher-repetition forms — the thresholds and
-    flag arithmetic are representation-independent). ``m`` columns:
-    doc_id, total_chars, n_lines, n_distinct_lines, line_chars,
-    distinct_line_chars, top{2,3,4}_mass, dup2_cov_chars."""
-    dl = 1000 * (F.col("n_lines") - F.col("n_distinct_lines"))
-    dlc = 1000 * (F.col("line_chars") - F.col("distinct_line_chars"))
-    ok_dl = dl <= GOPREP_DUP_LINE_PM * F.col("n_lines")
-    ok_dlc = dlc <= GOPREP_DUP_LINE_CHAR_PM * F.col("line_chars")
-    ok_t2 = 1000 * F.col("top2_mass") <= GOPREP_TOP_GRAM_PM[2] * F.col("total_chars")
-    ok_t3 = 1000 * F.col("top3_mass") <= GOPREP_TOP_GRAM_PM[3] * F.col("total_chars")
-    ok_t4 = 1000 * F.col("top4_mass") <= GOPREP_TOP_GRAM_PM[4] * F.col("total_chars")
-    ok_cov = 1000 * F.col("dup2_cov_chars") <= GOPREP_DUP_COV_PM * F.col(
-        "total_chars"
-    )
-    return m.select(
-        "doc_id", "total_chars", "n_lines", "n_distinct_lines",
-        "top2_mass", "top3_mass", "top4_mass", "dup2_cov_chars",
-        F.when(F.col("n_lines") > 0, F.expr("1000 * (n_lines - n_distinct_lines) DIV n_lines"))
-        .alias("dup_line_pm"),
-        F.when(
-            F.col("line_chars") > 0,
-            F.expr("1000 * (line_chars - distinct_line_chars) DIV line_chars"),
-        ).alias("dup_line_char_pm"),
-        ok_dl.alias("ok_dup_lines"),
-        ok_dlc.alias("ok_dup_line_chars"),
-        ok_t2.alias("ok_top2"),
-        ok_t3.alias("ok_top3"),
-        ok_t4.alias("ok_top4"),
-        ok_cov.alias("ok_dup_cov"),
-        (ok_dl & ok_dlc & ok_t2 & ok_t3 & ok_t4 & ok_cov).alias("keep"),
-    )
-
-
-@query(
-    "lex_gopher_repetition_exploded",
-    oracle=_GOPREP_ORACLE,
-    tags=("llm", "text", "quality", "documents"),
-)
-def text_gopher_repetition_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Long-document-safe Gopher repetition (VERDICT r15 #3): same rules,
-    metrics, thresholds, fixtures, and oracle as ``lex_gopher_repetition``,
-    but the n-gram counting is posexplode + groupBy(doc_id, n, gram)
-    instead of within-array higher-order lambdas — per-document cost drops
-    from O(k²) interpreted comparisons to O(k) hash-aggregate rows, the
-    form that survives real web documents (a 10k-token page is ~10⁸
-    comparisons/doc array-local vs ~30k aggregate rows here). This is the
-    production path for web-corpus document lengths; the array-local twin
-    stays registered for short-doc corpora where zero-exchange wins.
-    tests/test_llm_ops.py pins row-for-row equality between the two forms
-    on the shared corpus + fixture riders.
+    The n-gram counting is posexplode + groupBy(doc_id, n, gram), not
+    within-array higher-order lambdas: per-document cost is O(k) hash-
+    aggregate rows rather than O(k²) interpreted comparisons (k = token
+    count), the form that survives real web documents (a 10k-token page
+    is ~30k aggregate rows instead of ~10⁸ comparisons).
 
     Scale shape: one posexplode over the 2/3/4-gram union → hash aggregate
     on (doc_id, n, gram) with map-side combine → per-(doc_id, n) max +
@@ -1231,7 +1095,34 @@ def text_gopher_repetition_exploded(spark: SparkSession, sf_dir: str) -> DataFra
             F.coalesce("cov_chars", zero).alias("dup2_cov_chars"),
         )
     )
-    return _goprep_finalize(m)
+    # per-mille flags + keep: exact integer cross-multiplications
+    dl = 1000 * (F.col("n_lines") - F.col("n_distinct_lines"))
+    dlc = 1000 * (F.col("line_chars") - F.col("distinct_line_chars"))
+    ok_dl = dl <= GOPREP_DUP_LINE_PM * F.col("n_lines")
+    ok_dlc = dlc <= GOPREP_DUP_LINE_CHAR_PM * F.col("line_chars")
+    ok_t2 = 1000 * F.col("top2_mass") <= GOPREP_TOP_GRAM_PM[2] * F.col("total_chars")
+    ok_t3 = 1000 * F.col("top3_mass") <= GOPREP_TOP_GRAM_PM[3] * F.col("total_chars")
+    ok_t4 = 1000 * F.col("top4_mass") <= GOPREP_TOP_GRAM_PM[4] * F.col("total_chars")
+    ok_cov = 1000 * F.col("dup2_cov_chars") <= GOPREP_DUP_COV_PM * F.col(
+        "total_chars"
+    )
+    return m.select(
+        "doc_id", "total_chars", "n_lines", "n_distinct_lines",
+        "top2_mass", "top3_mass", "top4_mass", "dup2_cov_chars",
+        F.when(F.col("n_lines") > 0, F.expr("1000 * (n_lines - n_distinct_lines) DIV n_lines"))
+        .alias("dup_line_pm"),
+        F.when(
+            F.col("line_chars") > 0,
+            F.expr("1000 * (line_chars - distinct_line_chars) DIV line_chars"),
+        ).alias("dup_line_char_pm"),
+        ok_dl.alias("ok_dup_lines"),
+        ok_dlc.alias("ok_dup_line_chars"),
+        ok_t2.alias("ok_top2"),
+        ok_t3.alias("ok_top3"),
+        ok_t4.alias("ok_top4"),
+        ok_cov.alias("ok_dup_cov"),
+        (ok_dl & ok_dlc & ok_t2 & ok_t3 & ok_t4 & ok_cov).alias("keep"),
+    )
 
 
 #: every doc_id divisible by this is the stand-in "benchmark/eval" set the
@@ -3411,8 +3302,6 @@ def _wp_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _wp_build(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[DataFrame], DataFrame]:
-    sc_ctx = spark.sparkContext
-
     # Round vocabularies and DP levels are CHECKPOINTED eagerly, not
     # persisted: a WordPiece round launches FOUR broadcast jobs (the two
     # symbol-census sides, the argmax, the rebuild audit) whose subtrees
@@ -3420,25 +3309,20 @@ def _wp_build(
     # blocks but not the analyzer/planner tree, and the measured cost
     # grew 4.6s → 6.2s → 32s per round before truncation (and the DP
     # doubles the tree per level — the _uni_viterbi discipline).
-    def _checkpoint(df: DataFrame) -> DataFrame:
-        if sc_ctx.getCheckpointDir() is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    words = _checkpoint(_wp_words(spark, sf_dir))
+    words = checkpoint_round(_wp_words(spark, sf_dir))
     seed_syms = F.expr(
         "concat(array(substring(word, 1, 1)),"
         " transform(slice(split(word, ''), 2, greatest(length(word) - 1, 0)),"
         " x -> concat('##', x)))"
     )
-    vocab = _checkpoint(words.select("word", "freq", seed_syms.alias("syms")))
+    vocab = checkpoint_round(words.select("word", "freq", seed_syms.alias("syms")))
     seed_pieces = vocab.select(F.explode("syms").alias("piece")).distinct()
     summaries = []
     merged_pieces = None
     for r in range(1, WP_ROUNDS + 1):
         vocab, summary = bpe_merge_round(vocab, r, wordpiece=True)
-        vocab = _checkpoint(vocab)
-        summary = _checkpoint(summary)
+        vocab = checkpoint_round(vocab)
+        summary = checkpoint_round(summary)
         summaries.append(summary)
         m = summary.select(
             F.concat(
@@ -3466,7 +3350,7 @@ def _wp_build(
     # it are provably no-ops (every row is already done); the SQL twin
     # keeps the static WP_MAX_WORD_CHARS unroll, whose extra empty
     # levels cost DuckDB nothing.
-    pieces = _checkpoint(pieces)
+    pieces = checkpoint_round(pieces)
     row = words.agg(F.max(F.length("word"))).first()
     depth = min(WP_MAX_WORD_CHARS, int(row[0] or 0))
     state = words.select(
@@ -3486,7 +3370,7 @@ def _wp_build(
             .groupBy("word", "off", "ntok")
             .agg(F.max("blen").alias("adv"))
         )
-        state = _checkpoint(
+        state = checkpoint_round(
             done.unionByName(
                 adv.select(
                     "word",

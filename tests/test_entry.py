@@ -43,6 +43,20 @@ def test_oracles_subset_of_queries(monkeypatch):
     assert set(os_) <= set(qs)
 
 
+def test_one_builder_per_oracle():
+    """Registered names with the same oracle text share one Spark builder:
+    a second implementation of an already-certified result is a duplicate
+    path that only the query name selects."""
+    from projet_pipeline_bigdata_org_spark.plans.registry import all_specs
+
+    by_oracle: dict[str, dict] = {}
+    for name, spec in all_specs().items():
+        if spec.oracle is not None:
+            by_oracle.setdefault(spec.oracle, {}).setdefault(spec.fn, []).append(name)
+    twins = [sorted(fns.values()) for fns in by_oracle.values() if len(fns) > 1]
+    assert not twins, f"oracles served by more than one builder: {twins}"
+
+
 def test_every_no_oracle_query_has_readme_rationale():
     """Hygiene sweep: every registry name either carries a DuckDB oracle or
     appears by name in README's "rows-only forever" rationale section, so

@@ -949,15 +949,14 @@ def test_textops_zero_token_documents_yield_null_ratios(spark):
     assert stats[3].avg_token_len is not None
 
 
-def test_star_cc_equals_minlabel_cc_on_adversarial_graphs(spark):
-    """large/small-star CC must agree with min-label CC on shapes that
-    stress it: a long chain (worst diameter), stars, a clique, disjoint
-    pairs, and a seeded random graph."""
+def test_cc_matches_union_find_on_adversarial_graphs(spark):
+    """connected_components must equal a pure-Python union-find on shapes
+    that stress it: a long chain (worst diameter), stars, a clique,
+    disjoint pairs, and a seeded random graph."""
     import random
 
     from projet_pipeline_bigdata_org_spark.operators.grouped import (
         connected_components,
-        connected_components_star,
     )
 
     rng = random.Random(7)
@@ -970,17 +969,25 @@ def test_star_cc_equals_minlabel_cc_on_adversarial_graphs(spark):
     edges = [
         (a, b) for a, b in chain + star_lo + star_hi + clique + pairs + rand if a != b
     ]
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {(n, find(n)) for n in parent}
     df = spark.createDataFrame(edges, ["a_id", "b_id"])
-    base = {
-        (r.node, r.cluster_id) for r in connected_components(df, max_iter=60).collect()
-    }
-    star = {
-        (r.node, r.cluster_id) for r in connected_components_star(df).collect()
-    }
-    assert star == base
+    got = {(r.node, r.cluster_id) for r in connected_components(df).collect()}
+    assert got == want
     # labels must be the component minimum (a property, not just agreement)
     by_cluster = {}
-    for node, cid in star:
+    for node, cid in got:
         by_cluster.setdefault(cid, []).append(node)
     for cid, nodes in by_cluster.items():
         assert cid == min(min(nodes), cid)
@@ -1025,24 +1032,16 @@ def test_mm_decode_byte_length_agrees_on_non_ascii(spark):
 
 
 def test_cc_long_chain_falls_back_to_star(spark):
-    """A component whose diameter exceeds max_iter must still resolve through
-    the public min-label entry point (auto-fallback to large/small-star)
-    instead of failing the pipeline; the opt-out still raises."""
-    import pytest as _pytest
-
+    """A diameter-60 chain resolves to its minimum in O(log diameter)
+    large-star/small-star rounds, well inside STAR_MAX_ROUNDS."""
     from projet_pipeline_bigdata_org_spark.operators.grouped import (
         connected_components,
     )
 
-    chain = [(i, i + 1) for i in range(100, 160)]  # diameter 60 >> max_iter
+    chain = [(i, i + 1) for i in range(100, 160)]  # diameter 60
     df = spark.createDataFrame(chain, ["a_id", "b_id"])
-    got = {
-        (r.node, r.cluster_id)
-        for r in connected_components(df, max_iter=5).collect()
-    }
+    got = {(r.node, r.cluster_id) for r in connected_components(df).collect()}
     assert got == {(i, 100) for i in range(100, 161)}
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=5, fallback_to_star=False)
 
 
 def test_redact_pii_on_crafted_strings(spark):
@@ -1096,9 +1095,9 @@ def test_redact_pii_on_crafted_strings(spark):
 
 def test_cc_reliable_checkpoint_path(spark, tmp_path):
     """connected_components with a configured checkpoint dir takes the
-    reliable df.checkpoint() branch (durable materialization per round —
-    the executor-loss recovery path on a real cluster); labels must match
-    the localCheckpoint branch exactly."""
+    reliable df.checkpoint() branch of catalog.checkpoint_round (durable
+    materialization per round — the executor-loss recovery path on a real
+    cluster); labels must match the localCheckpoint branch exactly."""
     from projet_pipeline_bigdata_org_spark.operators.grouped import (
         connected_components,
     )
@@ -1111,7 +1110,7 @@ def test_cc_reliable_checkpoint_path(spark, tmp_path):
     try:
         reliable = {
             (r.node, r.cluster_id)
-            for r in connected_components(df, reliable_checkpoint=True).collect()
+            for r in connected_components(df).collect()
         }
     finally:
         sc.setCheckpointDir(None) if hasattr(sc, "setCheckpointDir") else None
@@ -5316,8 +5315,9 @@ def test_gopher_repetition_replay(spark, sf_dir):
     """Independent pure-Python replay of every Gopher repetition metric
     (duplicate lines, duplicate line chars, repeated top-n-gram mass,
     duplicated-2-gram char coverage) on the fixture riders plus a sample
-    of real documents, and rule-variety pins (every rule fails somewhere
-    across corpus + riders)."""
+    of real documents, rule-variety pins (every rule fails somewhere
+    across corpus + riders), and the degenerate 1-token/empty/NULL riders
+    landing keep=true with all-zero gram metrics."""
     from projet_pipeline_bigdata_org_spark.catalog import load
     from projet_pipeline_bigdata_org_spark.operators.textops import (
         GOPREP_DUP_COV_PM,
@@ -5325,10 +5325,13 @@ def test_gopher_repetition_replay(spark, sf_dir):
         GOPREP_DUP_LINE_PM,
         GOPREP_FIXTURE_ROWS,
         GOPREP_TOP_GRAM_PM,
-        text_gopher_repetition,
+        text_gopher_repetition_exploded,
     )
 
-    got = {r.doc_id: r for r in text_gopher_repetition(spark, sf_dir).collect()}
+    got = {
+        r.doc_id: r
+        for r in text_gopher_repetition_exploded(spark, sf_dir).collect()
+    }
     texts = dict(GOPREP_FIXTURE_ROWS)
     sample = (
         load(spark, sf_dir, "documents")
@@ -5400,6 +5403,11 @@ def test_gopher_repetition_replay(spark, sf_dir):
         assert any(not getattr(r, flag) for r in all_rows), flag
     keeps = {r.keep for r in all_rows}
     assert keeps == {True, False}
+    for rider in (93_200_004, 93_200_005, 93_200_006):
+        row = got[rider]
+        assert row.keep is True
+        assert row.top2_mass == row.top3_mass == row.top4_mass == 0
+        assert row.dup2_cov_chars == 0
 
 
 def test_ann_ivfpq_incremental_codes_equal_one_shot(spark, sf_dir):
@@ -5427,26 +5435,6 @@ def test_ann_ivfpq_incremental_codes_equal_one_shot(spark, sf_dir):
     # the frozen codebook really is history-only
     cids = {r.cid for r in cb.select("cid").distinct().collect()}
     assert all(c < PQ_INC_SEED_MAX and c % 10 < EMB_BATCH_RESIDUE for c in cids)
-
-
-def test_gopher_repetition_exploded_equality(spark, sf_dir):
-    """The explode+groupBy production form (VERDICT r15 #3) returns
-    row-for-row identical output to the array-local form on the shared
-    corpus + fixture riders (degenerate 1-token/empty/NULL docs included),
-    and the degenerate riders land keep=true with all-zero gram metrics."""
-    from projet_pipeline_bigdata_org_spark import plans
-
-    a = plans.registry.get("lex_gopher_repetition").fn(spark, sf_dir)
-    b = plans.registry.get("lex_gopher_repetition_exploded").fn(spark, sf_dir)
-    assert a.columns == b.columns
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert len(ra) > 0 and ra == rb
-    for rider in (93_200_004, 93_200_005, 93_200_006):
-        row = dict(zip(b.columns, next(x for x in rb if x[0] == rider)))
-        assert row["keep"] is True
-        assert row["top2_mass"] == row["top3_mass"] == row["top4_mass"] == 0
-        assert row["dup2_cov_chars"] == 0
 
 
 def test_decontaminate_attrib_lex(spark, sf_dir):

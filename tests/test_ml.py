@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from projet_pipeline_bigdata_org_spark.catalog import load
 from projet_pipeline_bigdata_org_spark.ml.pipeline import (
+    NUM_TOPICS,
     PipelineConfig,
     attach_topics,
     prepare_documents,
@@ -33,13 +34,13 @@ def test_pipeline_output_schema_and_dims(spark, docs, model):
     out = model.transform(prepare_documents(docs))
     row = out.select("word2vec_features", "topic_distribution", "prediction").first()
     assert len(row.word2vec_features) == CFG.vector_size
-    assert len(row.topic_distribution) == CFG.num_topics
+    assert len(row.topic_distribution) == NUM_TOPICS
     assert isinstance(row.prediction, float)
 
 
 def test_topic_labels_shape(model):
     labels = topic_labels(model).collect()
-    assert len(labels) == CFG.num_topics
+    assert len(labels) == NUM_TOPICS
     for r in labels:
         parts = r.topic_label.split("-")
         assert 1 <= len(parts) <= 3 and all(parts)
@@ -49,7 +50,7 @@ def test_attach_topics_no_udf_argmax(spark, docs, model):
     scored = model.transform(prepare_documents(docs))
     labeled = attach_topics(scored, topic_labels(model))
     rows = labeled.select("topic_id", "topic_label").collect()
-    assert all(0 <= r.topic_id < CFG.num_topics for r in rows)
+    assert all(0 <= r.topic_id < NUM_TOPICS for r in rows)
     assert all(r.topic_label for r in rows)
 
 

@@ -1353,28 +1353,6 @@ def test_epoch_plan_broadcast_schedule_no_sort(spark, sf_dir, no_auto_broadcast)
     assert "Sort " not in p.replace("SortAggregate", ""), p
 
 
-def test_gopher_repetition_zero_exchange(spark, sf_dir):
-    """lex_gopher_repetition is entirely array-local higher-order
-    arithmetic — no join, no explode-driven aggregate, and no DATA-KEYED
-    exchange: one codegen'd projection over the scan (the lex_c4_rules
-    shape). The only exchange permitted is the r17 input spread — a
-    round-robin repartition of the single-row-group local scan (guide
-    §2.5), which spread_input makes a no-op on multi-split production
-    inputs, so the at-scale plan remains zero-exchange."""
-    df = _Q["lex_gopher_repetition"].fn(spark, sf_dir)
-    p = plan_of(df)
-    import re as _re
-
-    keyed = [
-        ln for ln in p.splitlines()
-        if "Exchange" in ln and "RoundRobinPartitioning" not in ln
-    ]
-    assert not keyed, p
-    assert len(_re.findall(r"Exchange RoundRobinPartitioning", p)) <= 1, p
-    assert "Join" not in p, p
-    assert "Generate" not in p, p  # no explode
-
-
 def test_ann_ivfpq_incremental_broadcast_luts_cached_stores(spark, sf_dir):
     """sim_ann_ivfpq_incremental: the query LUT and both frozen
     codebooks broadcast, ranks are WindowGroupLimit-bounded, the
@@ -1388,7 +1366,8 @@ def test_ann_ivfpq_incremental_broadcast_luts_cached_stores(spark, sf_dir):
 
 
 def test_gopher_repetition_exploded_bounded_shuffle(spark, sf_dir):
-    """lex_gopher_repetition_exploded (the long-doc production form):
+    """lex_gopher_repetition_exploded (the builder both Gopher-repetition
+    names share):
     explode-driven hash aggregates with map-side partial aggregation,
     every exchange keyed by doc_id — no cartesian product, no row UDF,
     and a bounded exchange count (the dedup_repeated_passages shape,
