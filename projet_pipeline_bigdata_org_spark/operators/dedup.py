@@ -237,118 +237,6 @@ _NEARDUP_FIXTURE_SQL = " UNION ALL ".join(
 )
 
 
-def _incremental_minhash_pairs(
-    spark: SparkSession, sf_dir: str, portable: bool = False
-) -> DataFrame:
-    """The ONE incremental-LSH plan behind both registered forms:
-    ``portable`` swaps the two engine-specific hashes (xxhash64 shingle
-    hash, murmur3 band bucket) for the sha-slice / coin-fold pair the
-    DuckDB oracle rebuilds bit-identically — every other stage (shingle
-    staging, band derivation via the shared ``minhash_band_table``, the
-    batch-vs-history candidate join, the exact-Jaccard verify) is the
-    same code either way, so the certified driver row certifies THIS
-    plan, not a lookalike."""
-    from projet_pipeline_bigdata_org_spark.catalog import spread_input
-
-    d = spread_input(
-        load(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    ).unionByName(
-        spark.createDataFrame(
-            list(INCREMENTAL_NEARDUP_FIXTURE_ROWS),
-            "doc_id long, text string, source string",
-        )
-    )
-    hash_fn = portable_shingle_hashes if portable else shingle_hashes
-    sh = _persist_scoped(
-        "inc_minhash_cert_sh" if portable else "inc_minhash_sh",
-        shingled_doc_hashes(d, hash_fn),
-    )
-    is_batch = F.col("doc_id") % 10 >= _INCREMENTAL_BATCH_RESIDUE
-    # ONE band table over the whole staged corpus, persisted, with the
-    # history/batch split as filters on its doc_id (r17): the previous
-    # per-split band tables ran the signature aggregate twice (guide §2.4
-    # "two operations keyed the same way can share one exchange") — the
-    # band rows are identical because the split predicate commutes with
-    # the per-doc signature computation. At production scale the history
-    # band table is a pre-built parquet artifact either way.
-    bands = _persist_scoped(
-        "inc_minhash_bands", minhash_band_table(sh, portable)
-    )
-    hist_bands = bands.filter(~is_batch)
-    batch_bands = bands.filter(is_batch)
-    # persisted for the same reason as _lsh_candidate_jaccard's cand: the
-    # verify joins read the candidate set's REAL size, so AQE broadcasts
-    # it when it fits instead of sort-merging the shingle table twice
-    cand = _persist_scoped(
-        "inc_minhash_cand",
-        batch_bands.alias("b")
-        .join(
-            hist_bands.alias("h"),
-            (F.col("b.band") == F.col("h.band"))
-            & (F.col("b.bucket") == F.col("h.bucket")),
-        )
-        .select(
-            F.col("b.doc_id").alias("batch_id"), F.col("h.doc_id").alias("history_id")
-        )
-        .dropDuplicates(["batch_id", "history_id"]),
-    )
-    sh_b = sh.select(F.col("doc_id").alias("batch_id"), F.col("sh").alias("sh_b"))
-    sh_h = sh.select(F.col("doc_id").alias("history_id"), F.col("sh").alias("sh_h"))
-    inter = F.size(F.array_intersect("sh_b", "sh_h"))
-    union = F.size("sh_b") + F.size("sh_h") - inter
-    return (
-        cand.join(sh_b, "batch_id")
-        .join(sh_h, "history_id")
-        .select(
-            "batch_id", "history_id", (inter.cast("double") / union).alias("jaccard")
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
-
-
-@query(
-    "dedup_incremental_minhash",
-    tags=("llm", "dedup", "documents", "incremental", "no-oracle"),
-)
-def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental MinHash+LSH near-dedup: an incoming crawl shard's band
-    signatures joined against the historical corpus's band table — the
-    steady-state form of ``dedup_minhash_lsh`` the same way
-    ``dedup_incremental_exact`` is the steady-state form of exact dedup.
-    The reference's only dedup is a driver-side id-skip
-    (test/data_ingestion/testpy.py:130-131); this is what a daily 100 TB
-    crawl pipeline actually runs.
-
-    Scale shape, staged like the one-shot query:
-    1. one persisted shingle+hash table feeds signatures for both sides and
-       the verify step;
-    2. the history side reduces to its (doc_id, band, bucket) band table —
-       24 bytes/row; at cluster scale this is a staging table written once
-       per corpus epoch and bucketed by (band, bucket) via
-       sources/batch.py's write_bucketed_table, making the candidate join
-       zero-shuffle on the history side while each daily shard shuffles
-       only its own delta;
-    3. batch bands equi-join history bands (band, bucket) — never a
-       self-join, never all-pairs — and candidates re-join the persisted
-       shingle table by doc_id for the exact-Jaccard verify on candidates
-       only. At cluster scale the history SHINGLE store is likewise a
-       staging table bucketed by doc_id (sources/batch.py:
-       write_bucketed_table): the verify join then plans exchange-free on
-       the history side — the full historical shingle table is never
-       shuffled; only the (candidate-sized) batch side exchanges into the
-       history's bucket layout. Pinned by test_plan_shape.py::
-       test_minhash_verify_join_against_bucketed_shingle_store_no_history_exchange.
-    History/batch split is the same deterministic doc_id residue as the
-    exact sibling; INCREMENTAL_NEARDUP_FIXTURE_ROWS keeps the cross-split
-    hit path non-vacuous. No DuckDB oracle (xxhash64 band buckets aren't
-    reproducible there — same rationale as dedup_minhash_lsh), but the
-    SAME plan with portable hashes IS oracle-gated as
-    ``dedup_incremental_minhash_certified``; invariants: output equals
-    the one-shot LSH result restricted to cross-split pairs, and the
-    crafted fixture pair is flagged (tests/test_llm_ops.py)."""
-    return _incremental_minhash_pairs(spark, sf_dir)
-
-
 def _incremental_simhash_pairs(
     spark: SparkSession, sf_dir: str, portable: bool = False
 ) -> DataFrame:
@@ -617,11 +505,10 @@ def release_scoped_pins() -> int:
     return n
 
 
-def shingled_doc_hashes(d: DataFrame, hash_fn) -> DataFrame:
+def shingled_doc_hashes(d: DataFrame) -> DataFrame:
     """(doc_id, sh, hh) for documents with >= 3 whitespace tokens — the
-    ONE shingle+hash staging projection behind every MinHash query
-    (one-shot, certified, incremental; ``hash_fn`` picks xxhash64 vs the
-    portable sha-slice).
+    ONE shingle+hash staging projection behind every MinHash query and
+    sink (one-shot, incremental, streaming).
 
     r18 (guide §4.4-analogous duplicated evaluation): the previous
     ``.filter(size(sh) > 0)`` referenced the DERIVED shingle column, and
@@ -644,44 +531,19 @@ def shingled_doc_hashes(d: DataFrame, hash_fn) -> DataFrame:
         # hashes materialize INSIDE the persisted stage: projection
         # collapse would otherwise inline the hash transform into each of
         # the 32 permutation mins (32x the per-shingle hash work)
-        .select("doc_id", "sh", hash_fn(F.col("sh")).alias("hh"))
+        .select("doc_id", "sh", shingle_hashes(F.col("sh")).alias("hh"))
     )
 
 
-def minhash_signature(hashed: F.Column) -> F.Column:
-    """32-permutation MinHash signature over pre-hashed shingles.
-
-    ``hashed`` must be ``array<long>`` of values in [0, 2^31-1) — see
-    :func:`shingle_hashes`. h_i(x) = (a_i*x + b_i) mod (2^31-1); products
-    stay < 2^62 so int64 arithmetic is exact under ANSI. One column
-    expression per permutation keeps the whole signature inside codegen."""
-    def _perm(a: int, b: int):
-        # closure (not default args): F.transform inspects the lambda's arity
-        return lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_P31))
-
-    mins = [
-        F.array_min(F.transform(hashed, _perm(a, b)))
-        for a, b in zip(_PERM_A, _PERM_B)
-    ]
-    return F.array(*mins)
-
-
-def shingle_hashes(sh: F.Column) -> F.Column:
-    """xxhash64 of each shingle folded into [0, 2^31-1)."""
-    return F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_P31)))
-
-
-#: per-row multiplier of the portable band-bucket fold (any odd constant
-#: > 2^16 works; 65537 keeps every intermediate below 2^49 — see
-#: portable_band_bucket)
+#: per-row multiplier of the band-bucket fold (any odd constant > 2^16
+#: works; 65537 keeps every intermediate below 2^49 — see band_bucket)
 BAND_MIX = 65537
 
 
-def portable_shingle_hashes(sh: F.Column) -> F.Column:
-    """sha256-slice of each shingle folded into [0, 2^31-1): the
-    engine-portable twin of :func:`shingle_hashes` (xxhash64 is not
-    replayable in DuckDB; SHA256 is — the agg_hll_registers discipline).
-    First 8 hex chars -> 32 uniform bits -> mod Mersenne-31."""
+def shingle_hashes(sh: F.Column) -> F.Column:
+    """sha256-slice of each shingle folded into [0, 2^31-1), a hash DuckDB
+    replays bit-identically (the agg_hll_registers discipline): first 8
+    hex chars -> 32 uniform bits -> mod Mersenne-31."""
     return F.transform(
         sh,
         lambda s: F.pmod(
@@ -691,9 +553,9 @@ def portable_shingle_hashes(sh: F.Column) -> F.Column:
     )
 
 
-def portable_band_bucket(sig: F.Column, band: int) -> F.Column:
-    """Engine-portable band bucket: fold the band's MINHASH_ROWS signature
-    mins through the hash_coin chain, seeded by the band index —
+def band_bucket(sig: F.Column, band: int) -> F.Column:
+    """Band bucket: fold the band's MINHASH_ROWS signature mins through
+    the hash_coin chain, seeded by the band index —
     acc := coin(acc + m_k * BAND_MIX). Every intermediate stays below
     2^49 (coin < 2^32, m_k < 2^31, BAND_MIX = 2^16+1), so the fold is
     exact int64 in both engines; sql_band_bucket() is the DuckDB twin.
@@ -711,7 +573,7 @@ def portable_band_bucket(sig: F.Column, band: int) -> F.Column:
     slot, not a copy — constant-size tree, ~100x fewer ops/row. The
     fold order, seed, and integer arithmetic are unchanged
     (left-to-right over the same 4 mins), so buckets are bit-identical;
-    every certified-LSH oracle re-verified."""
+    every MinHash oracle re-verified."""
     from projet_pipeline_bigdata_org_spark.functions.hashing import hash_coin
 
     return F.aggregate(
@@ -722,9 +584,8 @@ def portable_band_bucket(sig: F.Column, band: int) -> F.Column:
 
 
 def sql_band_bucket(row_cols: tuple[str, ...]) -> str:
-    """DuckDB twin of portable_band_bucket: the identical nested coin fold,
-    seeded by the ``band`` column, over the pivoted per-band row-min
-    columns."""
+    """DuckDB twin of band_bucket: the identical nested coin fold, seeded
+    by the ``band`` column, over the pivoted per-band row-min columns."""
     from projet_pipeline_bigdata_org_spark.functions.hashing import sql_hash_coin
 
     acc = "band"
@@ -733,28 +594,20 @@ def sql_band_bucket(row_cols: tuple[str, ...]) -> str:
     return acc
 
 
-def minhash_bands(sig: F.Column, portable: bool = False) -> F.Column:
+def minhash_bands(sig: F.Column) -> F.Column:
     """``array<struct<band,bucket>>``: the signature sliced into
-    MINHASH_BANDS contiguous MINHASH_ROWS-row bands, each bucketed by one
-    hash of its slice — the JVM murmur3 (fastest) by default, or the
-    engine-portable coin fold when ``portable`` (the certified variant).
-    Shared by the one-shot, incremental, and certified LSH queries so
-    their band keys can never drift."""
-
-    def bucket(b: int) -> F.Column:
-        if portable:
-            return portable_band_bucket(sig, b)
-        return F.hash(F.slice(sig, b * MINHASH_ROWS + 1, MINHASH_ROWS))
-
+    MINHASH_BANDS contiguous MINHASH_ROWS-row bands, each bucketed by
+    :func:`band_bucket`. Shared by the one-shot, incremental and streaming
+    LSH paths so their band keys can never drift."""
     return F.array(
         *[
-            F.struct(F.lit(b).alias("band"), bucket(b).alias("bucket"))
+            F.struct(F.lit(b).alias("band"), band_bucket(sig, b).alias("bucket"))
             for b in range(MINHASH_BANDS)
         ]
     )
 
 
-def minhash_band_table(sh_df: DataFrame, portable: bool = False) -> DataFrame:
+def minhash_band_table(sh_df: DataFrame) -> DataFrame:
     """(doc_id, band, bucket) from a (doc_id, hh) hashed-shingle frame —
     24 bytes/row, the only thing an LSH candidate join ever shuffles.
     Empty-``hh`` docs are dropped HERE (as well as by every caller's
@@ -795,7 +648,7 @@ def minhash_band_table(sh_df: DataFrame, portable: bool = False) -> DataFrame:
         F.array(*[F.col(f"m{i}") for i in range(MINHASH_PERMS)]).alias("sig"),
     )
     return sig.select(
-        "doc_id", F.explode(minhash_bands(F.col("sig"), portable)).alias("bb")
+        "doc_id", F.explode(minhash_bands(F.col("sig"))).alias("bb")
     ).select(
         "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
@@ -803,9 +656,8 @@ def minhash_band_table(sh_df: DataFrame, portable: bool = False) -> DataFrame:
 
 def _lsh_candidate_jaccard(sh: DataFrame, bands: DataFrame) -> DataFrame:
     """Band-collision candidates -> exact-Jaccard verify on candidates
-    only — the stage shared verbatim by the production and certified LSH
-    queries (the certified driver row therefore certifies THIS code
-    path, not a lookalike).
+    only — the self-join stage of ``dedup_minhash_certified`` and of the
+    ingest funnel's within-batch pairs.
 
     The band table is persisted before the self-join (r17): the a/b
     aliases otherwise DUPLICATE the whole signature subtree in the
@@ -843,32 +695,42 @@ def _lsh_candidate_jaccard(sh: DataFrame, bands: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "dedup_minhash_lsh",
-    tags=("llm", "dedup", "documents", "no-oracle"),
-)
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup: shingle → 32-perm signature → 8 bands × 4 rows →
-    band-bucket equi-join → exact Jaccard verify on candidates only.
-
-    The 100 TB dedup plan, staged to keep the shuffles slim:
-    1. shingle table (doc_id, sh) persisted once — at cluster scale this is
-       a staging parquet table; projection collapse would otherwise inline
-       the shingle expression into all 32 signature mins and both join sides;
-    2. band join carries only (doc_id, band, bucket) — 24 bytes/row, never
-       the shingle arrays;
-    3. candidate pairs re-join the persisted shingle table by doc_id for the
-       exact-Jaccard verify, touching candidates only.
-    No oracle (xxhash64 isn't reproducible in DuckDB); tests assert candidate
-    pairs ⊆ exact-Jaccard pairs with matching values and recall ≥ 0.5.
-    """
-    from projet_pipeline_bigdata_org_spark.catalog import spread_input
-
-    # spread the single-split local scan before the per-row shingle work
-    # (guide §2.5; no-op on multi-split production inputs)
-    d = spread_input(load(spark, sf_dir, "documents").select("doc_id", "text"))
-    sh = _persist_scoped("minhash_sh", shingled_doc_hashes(d, shingle_hashes))
-    return _lsh_candidate_jaccard(sh, minhash_band_table(sh))
+def batch_history_jaccard(
+    bands_b: DataFrame, sh_b: DataFrame, bands_h: DataFrame, sh_h: DataFrame
+) -> DataFrame:
+    """(batch_id, history_id, jaccard) for batch docs whose band rows
+    ``bands_b`` collide with the history band rows ``bands_h`` and whose
+    shingle sets (``sh_b`` / ``sh_h``, (doc_id, sh) frames covering at
+    least the colliding ids) reach JACCARD_THRESHOLD — the band-collision
+    candidate join and the exact-Jaccard verify on candidates only,
+    shared by ``dedup_incremental_minhash`` and the streaming MinHash
+    sinks. The candidate set is not pinned: at sf0.1 a pin cost the
+    incremental query one more Spark job and no time, and the ingest
+    funnel sink three more jobs per epoch."""
+    cand = (
+        bands_b.alias("b")
+        .join(
+            bands_h.alias("h"),
+            (F.col("b.band") == F.col("h.band"))
+            & (F.col("b.bucket") == F.col("h.bucket")),
+        )
+        .select(
+            F.col("b.doc_id").alias("batch_id"), F.col("h.doc_id").alias("history_id")
+        )
+        .dropDuplicates(["batch_id", "history_id"])
+    )
+    sh_b = sh_b.select(F.col("doc_id").alias("batch_id"), F.col("sh").alias("sh_b"))
+    sh_h = sh_h.select(F.col("doc_id").alias("history_id"), F.col("sh").alias("sh_h"))
+    inter = F.size(F.array_intersect("sh_b", "sh_h"))
+    union = F.size("sh_b") + F.size("sh_h") - inter
+    return (
+        cand.join(sh_b, "batch_id")
+        .join(sh_h, "history_id")
+        .select(
+            "batch_id", "history_id", (inter.cast("double") / union).alias("jaccard")
+        )
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    )
 
 
 def _minhash_certified_oracle() -> str:
@@ -934,41 +796,52 @@ def _minhash_certified_oracle() -> str:
     """
 
 
+_MINHASH_ORACLE = _minhash_certified_oracle()
+
+
+@query(
+    "dedup_minhash_lsh",
+    oracle=_MINHASH_ORACLE,
+    tags=("llm", "dedup", "documents"),
+)
 @query(
     "dedup_minhash_certified",
-    oracle=_minhash_certified_oracle(),
+    oracle=_MINHASH_ORACLE,
     tags=("llm", "dedup", "documents"),
 )
 def dedup_minhash_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup with CERTIFIED arithmetic — the oracle-gated
-    twin of ``dedup_minhash_lsh`` (VERDICT r11 #1, the agg_hll_registers
-    pattern): same 32 affine permutations, same 8x4 banding, same
-    candidate-join + exact-Jaccard verify CODE (``minhash_signature``,
-    ``minhash_band_table``, ``_lsh_candidate_jaccard`` are shared, not
-    copied), with the two engine-specific hashes swapped for portable
-    ones the DuckDB oracle rebuilds bit-identically:
+    """MinHash+LSH near-dup: shingle → 32-perm signature → 8 bands × 4 rows →
+    band-bucket equi-join → exact Jaccard verify on candidates only.
+    ``dedup_minhash_lsh`` is the same builder under a second name.
 
-    - shingle hash: sha256 first-8-hex-chars mod 2^31-1 (instead of
-      xxhash64) — uniform 32 bits both engines agree on;
+    Both hashes are ones the DuckDB oracle rebuilds bit-identically
+    (VERDICT r11 #1, the agg_hll_registers pattern):
+
+    - shingle hash: sha256 first-8-hex-chars mod 2^31-1
+      (:func:`shingle_hashes`);
     - band bucket: the hash_coin fold of the band's 4 signature mins
-      (instead of JVM murmur3 over the slice) — exact int64 end-to-end.
+      (:func:`band_bucket`) — exact int64 end-to-end.
 
-    The driver row therefore certifies the LSH CONSTRUCTION — every
+    The oracle therefore certifies the LSH CONSTRUCTION — every
     permutation min, every band key, the candidate set, and the verify
-    division — not just that some pairs came out. The production query
-    keeps xxhash64/murmur3 (faster, fewer collisions at 10^9 docs);
-    test_llm_ops pins the two variants' verified pair sets against each
-    other at test scale so they cannot drift.
+    division — not just that some pairs came out.
 
-    Scale shape: identical to the production plan — the band join
-    shuffles 24-byte rows, the verify touches candidates only."""
+    The 100 TB dedup plan, staged to keep the shuffles slim:
+    1. shingle table (doc_id, sh, hh) persisted once — at cluster scale
+       this is a staging parquet table; projection collapse would
+       otherwise inline the shingle expression into all 32 signature mins
+       and both join sides;
+    2. band join carries only (doc_id, band, bucket) — 24 bytes/row, never
+       the shingle arrays;
+    3. candidate pairs re-join the persisted shingle table by doc_id for the
+       exact-Jaccard verify, touching candidates only."""
     from projet_pipeline_bigdata_org_spark.catalog import spread_input
 
+    # spread the single-split local scan before the per-row shingle work
+    # (guide §2.5; no-op on multi-split production inputs)
     d = spread_input(load(spark, sf_dir, "documents").select("doc_id", "text"))
-    sh = _persist_scoped(
-        "minhash_cert_sh", shingled_doc_hashes(d, portable_shingle_hashes)
-    )
-    return _lsh_candidate_jaccard(sh, minhash_band_table(sh, portable=True))
+    sh = _persist_scoped("minhash_sh", shingled_doc_hashes(d))
+    return _lsh_candidate_jaccard(sh, minhash_band_table(sh))
 
 
 def _inc_minhash_certified_oracle() -> str:
@@ -1039,34 +912,78 @@ def _inc_minhash_certified_oracle() -> str:
     """
 
 
+_INC_MINHASH_ORACLE = _inc_minhash_certified_oracle()
+
+
+@query(
+    "dedup_incremental_minhash",
+    oracle=_INC_MINHASH_ORACLE,
+    tags=("llm", "dedup", "documents", "incremental"),
+)
 @query(
     "dedup_incremental_minhash_certified",
-    oracle=_inc_minhash_certified_oracle(),
+    oracle=_INC_MINHASH_ORACLE,
     tags=("llm", "dedup", "documents", "incremental"),
 )
 def dedup_incremental_minhash_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental MinHash+LSH admission with CERTIFIED arithmetic — the
-    oracle-gated twin of ``dedup_incremental_minhash`` (VERDICT r12 #1):
-    the steady-state batch-vs-history path — the actual 100 TB hot path —
-    runs the SAME plan builder (``_incremental_minhash_pairs``; shingle
-    staging, ``minhash_band_table`` band keys, candidate join, exact-
-    Jaccard verify are shared code, not copies) with the two engine-
-    specific hashes swapped for the portable pair the r12 one-shot twin
-    introduced: sha-slice shingle hashes (``portable_shingle_hashes``,
-    dedup.py) and hash_coin band-bucket folds (``portable_band_bucket``).
-    The oracle rebuilds every permutation min, every band key, the
-    batch-vs-history candidate set (including the crafted cross-split
-    near-duplicate fixture), and the verify division bit-identically —
-    so the driver row certifies steady-state ADMISSION end-to-end.
-    Production keeps xxhash64/murmur3; a restriction-equality test pins
-    this twin against ``dedup_minhash_certified`` on cross-split pairs
-    (the same invariant the production pair carries).
+    """Incremental MinHash+LSH near-dedup: an incoming crawl shard's band
+    signatures joined against the historical corpus's band table — the
+    steady-state form of ``dedup_minhash_certified`` the same way
+    ``dedup_incremental_exact`` is the steady-state form of exact dedup.
+    ``dedup_incremental_minhash`` is the same builder under a second name.
+    The reference's only dedup is a driver-side id-skip
+    (test/data_ingestion/testpy.py:130-131); this is what a daily 100 TB
+    crawl pipeline actually runs.
 
-    Scale shape: identical to production — 24-byte band rows on the
-    candidate join, history sides bucketable to zero-shuffle, verify on
-    candidates only."""
-    return _incremental_minhash_pairs(spark, sf_dir, portable=True)
+    Scale shape, staged like the one-shot query:
+    1. one persisted shingle+hash table feeds signatures for both sides and
+       the verify step;
+    2. the history side reduces to its (doc_id, band, bucket) band table —
+       24 bytes/row; at cluster scale this is a staging table written once
+       per corpus epoch and bucketed by (band, bucket) via
+       sources/batch.py's write_bucketed_table, making the candidate join
+       zero-shuffle on the history side while each daily shard shuffles
+       only its own delta;
+    3. batch bands equi-join history bands (band, bucket) — never a
+       self-join, never all-pairs — and candidates re-join the persisted
+       shingle table by doc_id for the exact-Jaccard verify on candidates
+       only. At cluster scale the history SHINGLE store is likewise a
+       staging table bucketed by doc_id (sources/batch.py:
+       write_bucketed_table): the verify join then plans exchange-free on
+       the history side — the full historical shingle table is never
+       shuffled; only the (candidate-sized) batch side exchanges into the
+       history's bucket layout. Pinned by test_plan_shape.py::
+       test_minhash_verify_join_against_bucketed_shingle_store_no_history_exchange.
+    History/batch split is the same deterministic doc_id residue as the
+    exact sibling; INCREMENTAL_NEARDUP_FIXTURE_ROWS keeps the cross-split
+    hit path non-vacuous. The oracle (VERDICT r12 #1) rebuilds every
+    permutation min, every band key, the batch-vs-history candidate set
+    (including the crafted fixture) and the verify division
+    bit-identically; tests pin the output to the one-shot result
+    restricted to cross-split pairs (tests/test_llm_ops.py)."""
+    from projet_pipeline_bigdata_org_spark.catalog import spread_input
 
+    d = spread_input(
+        load(spark, sf_dir, "documents").select("doc_id", "text", "source")
+    ).unionByName(
+        spark.createDataFrame(
+            list(INCREMENTAL_NEARDUP_FIXTURE_ROWS),
+            "doc_id long, text string, source string",
+        )
+    )
+    sh = _persist_scoped("inc_minhash_sh", shingled_doc_hashes(d))
+    is_batch = F.col("doc_id") % 10 >= _INCREMENTAL_BATCH_RESIDUE
+    # ONE band table over the whole staged corpus, persisted, with the
+    # history/batch split as filters on its doc_id (r17): the previous
+    # per-split band tables ran the signature aggregate twice (guide §2.4
+    # "two operations keyed the same way can share one exchange") — the
+    # band rows are identical because the split predicate commutes with
+    # the per-doc signature computation. At production scale the history
+    # band table is a pre-built parquet artifact either way.
+    bands = _persist_scoped("inc_minhash_bands", minhash_band_table(sh))
+    return batch_history_jaccard(
+        bands.filter(is_batch), sh, bands.filter(~is_batch), sh
+    )
 
 
 @query(

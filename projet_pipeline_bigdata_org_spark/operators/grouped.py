@@ -353,8 +353,12 @@ def _asof_last_order(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         out["last_order_day"] = pd.array([None] * len(left), dtype="Int64")
         return out
     order_days = np.sort(right["order_day"].to_numpy())
-    # first index >= event_day, minus 1 → last index strictly before
-    idx = np.searchsorted(order_days, out["event_day"].to_numpy(), side="left") - 1
+    event_days = out["event_day"].to_numpy(dtype="float64")
+    # first index >= event_day, minus 1 → last index strictly before; a
+    # NULL event day (NaN from Arrow) sorts past every order day, but
+    # `<` against NULL never matches, so it gets no order day
+    idx = np.searchsorted(order_days, event_days, side="left") - 1
+    idx[np.isnan(event_days)] = -1
     # r18 (guide §4.2): build the nullable Int64 column from the numpy
     # values + mask directly — the previous per-row
     # [int(v) if v >= 0 else None ...] comprehension boxed every event

@@ -308,7 +308,11 @@ def lsh_buckets_np():
     expression at sf0.1 — wide hyperplane banks are exactly the case where
     a BLAS matmul beats per-plane codegen folds, and the batch never leaves
     Arrow. The plane bank is a ~40 KB process constant (a broadcast
-    variable on a real cluster would be equivalent)."""
+    variable on a real cluster would be equivalent).
+
+    A NULL row or a vector of any length but EMBEDDING_DIM gets bucket 0 in
+    every table, as in the JVM twin, whose ``zip_with`` pads the missing
+    products with NULL so that no plane sum is positive."""
     import numpy as np
     import pandas as pd
 
@@ -318,9 +322,15 @@ def lsh_buckets_np():
     pow2 = 1 << np.arange(LSH_PLANES_PER_TABLE, dtype=np.int64)
 
     def _buckets(emb):
-        m = np.vstack(emb.to_numpy())
-        bits = (m @ planes > 0).reshape(len(m), LSH_TABLES, LSH_PLANES_PER_TABLE)
-        buckets = (bits * pow2).sum(axis=2)
+        rows = emb.to_numpy()
+        whole = np.array(
+            [r is not None and len(r) == EMBEDDING_DIM for r in rows], dtype=bool
+        )
+        buckets = np.zeros((len(rows), LSH_TABLES), dtype=np.int64)
+        if whole.any():
+            m = np.vstack(rows[whole])
+            bits = (m @ planes > 0).reshape(len(m), LSH_TABLES, LSH_PLANES_PER_TABLE)
+            buckets[whole] = (bits * pow2).sum(axis=2)
         # r18 (guide §4.2): return the per-table bucket ids as a plain
         # int64 array (index IS the table id; consumers posexplode) —
         # the previous array<struct<tbl,bucket>> form boxed

@@ -472,58 +472,38 @@ def _admit_batch(
 
 
 def _minhash_history_hits(
-    sink: _EpochSink,
-    sh: DataFrame,
-    bands: DataFrame,
-    epoch_id: int,
-    threshold: float,
-    bucket_type: str = "int",
+    sink: _EpochSink, sh: DataFrame, bands: DataFrame, epoch_id: int
 ) -> DataFrame:
     """``doc_id``s of the batch shingle stage ``sh`` (doc_id, sh) with a
     verified near-duplicate in the prior MinHash history under
-    ``sink.history_path``: the batch ``bands`` equi-join the ``bands``
-    store into candidates, and exact Jaccard >= ``threshold`` against the
-    ``shingles`` store runs on candidates only."""
-    cand = (
-        bands.alias("b")
-        .join(
-            sink._prior(
-                f"{sink.history_path}/bands",
-                f"doc_id long, band int, bucket {bucket_type}",
-                epoch_id,
-            ).alias("h"),
-            (F.col("b.band") == F.col("h.band"))
-            & (F.col("b.bucket") == F.col("h.bucket")),
-        )
-        .select(
-            F.col("b.doc_id").alias("batch_id"), F.col("h.doc_id").alias("history_id")
-        )
-        .dropDuplicates(["batch_id", "history_id"])
-    )
-    sh_b = sh.select(F.col("doc_id").alias("batch_id"), F.col("sh").alias("sh_b"))
-    sh_h = sink._prior(
-        f"{sink.history_path}/shingles", "doc_id long, sh array<string>", epoch_id
-    ).select(F.col("doc_id").alias("history_id"), F.col("sh").alias("sh_h"))
-    inter = F.size(F.array_intersect("sh_b", "sh_h"))
-    union = F.size("sh_b") + F.size("sh_h") - inter
-    return (
-        cand.join(sh_b, "batch_id")
-        .join(sh_h, "history_id")
-        .filter((inter.cast("double") / union) >= F.lit(threshold))
-        .select(F.col("batch_id").alias("doc_id"))
+    ``sink.history_path``: ``dedup.batch_history_jaccard`` of the batch
+    ``bands`` against the ``bands`` and ``shingles`` stores. A history
+    written with the earlier murmur3 band buckets (``int``) does not line
+    up with the coin-fold ``long`` buckets, so it must be rebuilt."""
+    from projet_pipeline_bigdata_org_spark.operators.dedup import (
+        batch_history_jaccard,
     )
 
+    return batch_history_jaccard(
+        bands,
+        sh,
+        sink._prior(
+            f"{sink.history_path}/bands",
+            "doc_id long, band int, bucket long",
+            epoch_id,
+        ),
+        sink._prior(
+            f"{sink.history_path}/shingles", "doc_id long, sh array<string>", epoch_id
+        ),
+    ).select(F.col("batch_id").alias("doc_id"))
 
-def _write_minhash_history(
-    sink: _EpochSink, sh: DataFrame, epoch_id: int, portable: bool = False
-) -> None:
+
+def _write_minhash_history(sink: _EpochSink, sh: DataFrame, epoch_id: int) -> None:
     """Record the shingle stage ``sh`` in the ``bands`` and ``shingles``
     stores that :func:`_minhash_history_hits` reads."""
     from projet_pipeline_bigdata_org_spark.operators.dedup import minhash_band_table
 
-    sink._write(
-        minhash_band_table(sh, portable=portable), f"{sink.history_path}/bands", epoch_id
-    )
+    sink._write(minhash_band_table(sh), f"{sink.history_path}/bands", epoch_id)
     sink._write(sh.select("doc_id", "sh"), f"{sink.history_path}/shingles", epoch_id)
 
 
@@ -539,9 +519,9 @@ class MinHashHistoryDedupSink(_EpochSink):
     Per micro-batch:
 
     1. the shard's texts shingle once into a cached (doc_id, sh, hh)
-       stage — identical staging discipline (and identical shingle/hash/
-       band expressions, shared via ``minhash_band_table``) as the batch
-       query, so band keys can never drift between the two forms;
+       stage — the batch query's staging and band expressions, shared via
+       ``shingled_doc_hashes`` and ``minhash_band_table``, so band keys
+       can never drift between the two forms;
     2. candidate generation: the shard's 24-byte (doc_id, band, bucket)
        rows equi-join the historical band table;
     3. exact-Jaccard verify on candidates only against the historical
@@ -577,32 +557,17 @@ class MinHashHistoryDedupSink(_EpochSink):
 
     def _epoch(self, batch_df: DataFrame, epoch_id: int) -> dict:
         from projet_pipeline_bigdata_org_spark.operators.dedup import (
-            JACCARD_THRESHOLD,
             minhash_band_table,
-            shingle_hashes,
-        )
-        from projet_pipeline_bigdata_org_spark.operators.textops import (
-            shingles,
-            ws_tokens,
+            shingled_doc_hashes,
         )
 
         batch_df = self._cache(batch_df)
         # one shingle pass, cached: feeds the band table, the verify join,
-        # and the history write (same projection-collapse guard as the
-        # batch query — inlining shingle_hashes into all 32 permutation
-        # mins would re-hash every shingle 32x)
-        sh = self._cache(
-            batch_df.select(
-                "doc_id", F.array_distinct(shingles(ws_tokens("text"))).alias("sh")
-            )
-            .filter(F.size("sh") > 0)
-            .select("doc_id", "sh", shingle_hashes(F.col("sh")).alias("hh"))
-        )
-        rejected_ids = (
-            _minhash_history_hits(
-                self, sh, minhash_band_table(sh), epoch_id, JACCARD_THRESHOLD
-            ).distinct()
-        )
+        # and the history write (the batch query's staging projection)
+        sh = self._cache(shingled_doc_hashes(batch_df))
+        rejected_ids = _minhash_history_hits(
+            self, sh, minhash_band_table(sh), epoch_id
+        ).distinct()
         return _admit_batch(self, batch_df, sh, rejected_ids, epoch_id)
 
     def _write_history(self, adm_sh: DataFrame, epoch_id: int) -> None:
@@ -1673,17 +1638,13 @@ class CurationFunnelIngestSink(_EpochSink):
     joins are the min-id keeper partial agg, the sha membership join,
     the 24-byte band-collision join (history side bucketable to
     zero-shuffle like the standalone sink), the candidates-only Jaccard
-    verify, and the broadcast-dictionary overlap join. ``portable=True``
-    swaps xxhash64/murmur3 for the certified sha-slice/coin-fold hashes
-    (DuckDB-reproducible — what the mode-equality test runs); production
-    keeps the default JVM hashes."""
+    verify, and the broadcast-dictionary overlap join."""
 
     spark: SparkSession
     out_path: str
     attributed_path: str
     history_path: str
     bench_shingles: DataFrame  # one column `s`: the static eval dictionary
-    portable: bool = False
     stats: dict = field(
         default_factory=lambda: {"batches": 0, "admitted": 0, "removed": 0}
     )
@@ -1694,10 +1655,8 @@ class CurationFunnelIngestSink(_EpochSink):
         from projet_pipeline_bigdata_org_spark.operators.curation import qc_margin
         from projet_pipeline_bigdata_org_spark.operators.dedup import (
             _lsh_candidate_jaccard,
-            JACCARD_THRESHOLD,
             minhash_band_table,
-            portable_shingle_hashes,
-            shingle_hashes,
+            shingled_doc_hashes,
         )
         from projet_pipeline_bigdata_org_spark.operators.textops import (
             DECONTAM_BENCH_MOD,
@@ -1714,27 +1673,20 @@ class CurationFunnelIngestSink(_EpochSink):
         # one shingle/hash stage over this epoch's FIRST-SEEN keepers:
         # feeds the within-batch pair join, the history verify, and the
         # history writes (the MinHashHistoryDedupSink staging discipline)
-        hashes = portable_shingle_hashes if self.portable else shingle_hashes
         sh = self._cache(
-            base.filter(~F.col("__f_exact"))
-            .select(
-                did.alias("doc_id"),
-                F.array_distinct(shingles(ws_tokens(text))).alias("sh"),
+            shingled_doc_hashes(
+                base.filter(~F.col("__f_exact")).select(
+                    did.alias("doc_id"), text.alias("text")
+                )
             )
-            .filter(F.size("sh") > 0)
-            .select("doc_id", "sh", hashes(F.col("sh")).alias("hh"))
         )
-        bands_b = minhash_band_table(sh, portable=self.portable)
+        bands_b = minhash_band_table(sh)
         # within-batch verified pairs flag the LARGER id (first-seen
         # wins — the one-shot twin's a_id < b_id rule)
         near_batch = _lsh_candidate_jaccard(sh, bands_b).select(
             F.col("b_id").alias("doc_id")
         )
-        # portable (coin-fold) buckets are BIGINT; JVM murmur3 buckets INT
-        near_hist = _minhash_history_hits(
-            self, sh, bands_b, epoch_id, JACCARD_THRESHOLD,
-            "long" if self.portable else "int",
-        )
+        near_hist = _minhash_history_hits(self, sh, bands_b, epoch_id)
         near_ids = (
             near_batch.unionByName(near_hist)
             .distinct()
@@ -1765,5 +1717,5 @@ class CurationFunnelIngestSink(_EpochSink):
         counts = _funnel_tail(self, flagged, batch_df.columns, sha_path, epoch_id)
         # EVERY first-seen keeper enters the band/shingle history whatever
         # its stage (ladder pair semantics, docstring 1-2)
-        _write_minhash_history(self, sh, epoch_id, portable=self.portable)
+        _write_minhash_history(self, sh, epoch_id)
         return counts

@@ -59,8 +59,10 @@ def test_one_builder_per_oracle():
 
 def test_every_no_oracle_query_has_readme_rationale():
     """Hygiene sweep: every registry name either carries a DuckDB oracle or
-    appears by name in README's "rows-only forever" rationale section, so
-    the oracle/no-oracle split can't silently drift as queries are added."""
+    appears by name in README's "rows-only forever" rationale section, and
+    every registry name a rationale bullet leads with (its text before the
+    first " — ") has no oracle, so the oracle/no-oracle split can't
+    silently drift in either direction."""
     qs, os_ = entrymod.queries(), entrymod.oracle_sql()
     no_oracle = sorted(set(qs) - set(os_))
     text = README.read_text()
@@ -73,3 +75,14 @@ def test_every_no_oracle_query_has_readme_rationale():
     section = m.group(1)
     undocumented = [n for n in no_oracle if f"`{n}`" not in section]
     assert not undocumented, f"no-oracle queries lacking README rationale: {undocumented}"
+    heads = [
+        " ".join(b.split()).split(" — ")[0]
+        for b in re.split(r"^- ", section, flags=re.M)[1:]
+    ]
+    stale = [
+        n
+        for h in heads
+        for n in re.findall(r"`([A-Za-z0-9_]+)`", h)
+        if n in qs and n in os_
+    ]
+    assert not stale, f"README rows-only rationale names oracle-gated queries: {stale}"

@@ -799,6 +799,35 @@ def test_cdc_twins_agree_on_fuzz_orders(fuzz_orders):
     assert got == want, f"cdc drift: {got[:3]} vs {want[:3]}"
 
 
+def test_cogrouped_asof_null_event_ts_matches_oracle(spark):
+    """An event with a NULL ``ts`` reaches the cogroup kernel as a NaN
+    event day, which ``searchsorted`` places past every order day. The
+    oracle's ``<`` against NULL never matches, so the event must get a
+    NULL last order day, not the user's latest one."""
+    import datetime as dt
+    from unittest import mock
+
+    from projet_pipeline_bigdata_org_spark import plans
+    from projet_pipeline_bigdata_org_spark.operators import grouped
+
+    plans.load_all()
+    spec = plans.registry.all_specs()["pair_cogrouped_asof"]
+    events = [(1, 7, None), (2, 7, dt.datetime(1995, 6, 10, 12))]
+    orders = [(7, dt.datetime(1995, 6, 1)), (7, dt.datetime(1995, 6, 5))]
+    tables = {
+        "events": spark.createDataFrame(events, "event_id long, user_id long, ts timestamp"),
+        "orders": spark.createDataFrame(orders, "o_custkey long, o_orderdate timestamp"),
+    }
+    con = duckdb.connect()
+    con.register("events", pd.DataFrame(events, columns=["event_id", "user_id", "ts"]))
+    con.register("orders", pd.DataFrame(orders, columns=["o_custkey", "o_orderdate"]))
+    with mock.patch.object(grouped, "load", lambda _s, _d, t: tables[t]):
+        got = {r[0]: tuple(r) for r in spec.fn(spark, "x").collect()}
+    want = {r[0]: tuple(r) for r in con.execute(spec.oracle).fetchall()}
+    assert got == want
+    assert got[1][3] is None
+
+
 def test_minhash_certified_twins_agree_on_fuzz(fuzz_df):
     """The certified MinHash stack — sha-slice shingle hashes, all 32
     affine-permutation mins, the coin-fold band buckets, candidates, and

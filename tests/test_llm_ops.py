@@ -36,29 +36,6 @@ def test_minhash_pairs_sound_and_recall(spark, sf_dir, exact_jaccard_pairs):
         assert recall >= 0.5, f"minhash recall too low: {recall:.2f}"
 
 
-def test_minhash_certified_matches_production_pairs(
-    spark, sf_dir, exact_jaccard_pairs
-):
-    """The certified (sha-hash) and production (xxhash64) MinHash variants
-    share the signature/banding/verify CODE and differ only in hash
-    source; both are sound (subset of exact Jaccard pairs, same values),
-    and at test scale their verified pair sets agree — a drift in the
-    shared machinery would desynchronize them before it reached the
-    driver gate."""
-    cert = {
-        (r.a_id, r.b_id): r.jaccard
-        for r in _Q["dedup_minhash_certified"].fn(spark, sf_dir).collect()
-    }
-    prod = {
-        (r.a_id, r.b_id): r.jaccard
-        for r in _Q["dedup_minhash_lsh"].fn(spark, sf_dir).collect()
-    }
-    assert set(cert) <= set(exact_jaccard_pairs)
-    for k, v in cert.items():
-        assert abs(v - exact_jaccard_pairs[k]) < 1e-12
-    assert set(cert) == set(prod)
-
-
 def test_simhash_certified_sound_and_aligned(spark, sf_dir):
     """Certified SimHash invariants: ordered pairs, Hamming within the
     published bound, and (since both variants share simhash_pairs) the
@@ -790,14 +767,19 @@ def test_simhash_numpy_and_jvm_fingerprints_agree(spark, sf_dir):
 def test_lsh_numpy_and_jvm_bucketing_agree(spark, sf_dir):
     """The matmul pandas-UDF bucketing (query path) and the pure-JVM fold
     expression must assign identical (table, bucket) ids on the fixture
-    corpus — same planes, same sign rule, locked against drift."""
+    corpus — same planes, same sign rule, locked against drift — plus a
+    NULL embedding and a short vector, which must not fail the batch."""
     from projet_pipeline_bigdata_org_spark.catalog import load
     from projet_pipeline_bigdata_org_spark.operators.similarity import (
         lsh_buckets_np,
         lsh_table_buckets,
     )
 
-    e = load(spark, sf_dir, "embeddings")
+    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding").unionByName(
+        spark.createDataFrame(
+            [(-1, None), (-2, [0.5, -1.0, 2.0])], "vec_id long, embedding array<float>"
+        )
+    )
     jvm = {
         (r.vec_id, r.tb.tbl, r.tb.bucket)
         for r in e.select(
@@ -1444,11 +1426,7 @@ def test_incremental_minhash_equals_oneshot_cross_split(spark, sf_dir, exact_jac
     band keys (shared minhash_band_table), same verify — a batch-vs-history
     collision happens iff the unioned corpus collides in that band. Also
     soundness: every non-fixture pair is a true exact-Jaccard pair with the
-    identical value."""
-    from projet_pipeline_bigdata_org_spark.operators.dedup import (
-        _INCREMENTAL_BATCH_RESIDUE,
-    )
-
+    identical value, and the crafted cross-split near-dup fires."""
     inc = {
         (r.batch_id, r.history_id): r.jaccard
         for r in plans.get("dedup_incremental_minhash").fn(spark, sf_dir).collect()
@@ -1458,20 +1436,13 @@ def test_incremental_minhash_equals_oneshot_cross_split(spark, sf_dir, exact_jac
         (r.a_id, r.b_id): r.jaccard
         for r in plans.get("dedup_minhash_lsh").fn(spark, sf_dir).collect()
     }
-
-    def is_batch(i: int) -> bool:
-        return i % 10 >= _INCREMENTAL_BATCH_RESIDUE
-
-    want = {}
-    for (a, b), v in one_shot.items():
-        if is_batch(a) != is_batch(b):  # pair straddles the split
-            batch_id, hist_id = (a, b) if is_batch(a) else (b, a)
-            want[(batch_id, hist_id)] = v
-    assert inc_corpus == want
+    assert inc_corpus == _cross_split_restriction(one_shot)
     # soundness vs the exact inverted-index ground truth
     for k, v in inc_corpus.items():
         a, b = min(k), max(k)
         assert abs(v - exact_jaccard_pairs[(a, b)]) < 1e-12
+    assert 0.5 < inc[(2_000_000_008, 2_000_000_000)] < 1.0
+    assert not any(b == 2_000_000_018 for b, _ in inc)
 
 
 def test_incremental_minhash_fixture_flagged(spark, sf_dir):
@@ -1541,32 +1512,6 @@ def _cross_split_restriction(one_shot: dict) -> dict:
             batch_id, hist_id = (a, b) if a_batch else (b, a)
             want[(batch_id, hist_id)] = v
     return want
-
-
-def test_incremental_minhash_certified_equals_certified_oneshot_cross_split(
-    spark, sf_dir
-):
-    """The r13 certified-admission invariant (VERDICT r12 #1): the
-    certified incremental twin must equal the certified ONE-SHOT twin
-    restricted to cross-split pairs — same portable shingle hashes, same
-    coin-fold band buckets (shared `minhash_band_table(portable=True)`),
-    same verify — so the two driver-certified variants cannot drift from
-    each other any more than the production pair can."""
-    inc = {
-        (r.batch_id, r.history_id): r.jaccard
-        for r in plans.get("dedup_incremental_minhash_certified")
-        .fn(spark, sf_dir)
-        .collect()
-    }
-    inc_corpus = {k: v for k, v in inc.items() if max(k) < 2_000_000_000}
-    one_shot = {
-        (r.a_id, r.b_id): r.jaccard
-        for r in plans.get("dedup_minhash_certified").fn(spark, sf_dir).collect()
-    }
-    assert inc_corpus == _cross_split_restriction(one_shot)
-    # the crafted cross-split near-dup fires on the certified arithmetic
-    assert 0.5 < inc[(2_000_000_008, 2_000_000_000)] < 1.0
-    assert not any(b == 2_000_000_018 for b, _ in inc)
 
 
 def test_incremental_simhash_certified_equals_certified_oneshot_cross_split(

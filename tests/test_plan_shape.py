@@ -458,26 +458,6 @@ def test_incremental_dedup_joins_slim_hash_keys_only(spark, sf_dir):
         assert "text" not in ex, f"text column shuffles: {ex}\n{p}"
 
 
-def test_incremental_minhash_certified_same_shuffle_shape(spark, sf_dir):
-    """The r13 certified incremental twin must keep the production plan's
-    scale shape: band-key-only exchanges (the shingle array never crosses
-    a band-join shuffle), the one persisted shingle stage, and no
-    cartesian/nested-loop join — the sha certification cost may not
-    change the shuffle contract."""
-    df = _Q["dedup_incremental_minhash_certified"].fn(spark, sf_dir)
-    p = plan_of(df)
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p, p
-    assert "InMemoryTableScan" in p, p
-    band_exchanges = [
-        ex
-        for ex in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", p)
-        if "band" in ex or "bucket" in ex
-    ]
-    assert band_exchanges, f"no band-key exchanges found (plan form changed?):\n{p}"
-    for ex in band_exchanges:
-        assert "sh" not in ex.split(", ") and "text" not in ex, ex
-
-
 def test_maxsim_broadcasts_query_side_no_cartesian(spark, sf_dir):
     """sim_maxsim_multivector's per-dim dot join must BROADCAST the tiny
     query sub-vector block (the corpus side never repartitions for it)

@@ -2144,7 +2144,7 @@ def test_curation_funnel_ingest_sink_matches_twin_and_replays(spark, sf_dir, tmp
     streaming the corpus (+ riders exercising the new stages) through
     CurationFunnelIngestSink in doc_id-ordered epochs yields EXACTLY the
     certified batch twin's attribution on the corpus (mode equality with
-    ``curate_funnel_stream_prefix6``, portable hashes both sides);
+    ``curate_funnel_stream_prefix6``);
     planted riders hit exact-dup (1), cross-epoch near-dup (3),
     WITHIN-batch near-dup (3), and Gopher (6); worst-order replay
     rewrites every store identically (strict prior-epoch history
@@ -2195,7 +2195,7 @@ def test_curation_funnel_ingest_sink_matches_twin_and_replays(spark, sf_dir, tmp
     out, att, hist = (
         str(tmp_path / "out"), str(tmp_path / "att"), str(tmp_path / "hist")
     )
-    sink = CurationFunnelIngestSink(spark, out, att, hist, bench, portable=True)
+    sink = CurationFunnelIngestSink(spark, out, att, hist, bench)
     ids = sorted(r.doc_id for r in stream.select("doc_id").collect())
     cuts = [ids[len(ids) // 3], ids[2 * len(ids) // 3]]
     epochs = [
