@@ -1514,6 +1514,30 @@ def _cross_split_restriction(one_shot: dict) -> dict:
     return want
 
 
+def test_incremental_minhash_certified_equals_certified_oneshot_cross_split(
+    spark, sf_dir
+):
+    """The certified incremental twin must equal the certified one-shot
+    twin restricted to cross-split pairs — same sha-slice shingle hashes,
+    same coin-fold band buckets (shared `minhash_band_table`), same verify
+    — so the two driver-certified variants cannot drift from each other."""
+    inc = {
+        (r.batch_id, r.history_id): r.jaccard
+        for r in plans.get("dedup_incremental_minhash_certified")
+        .fn(spark, sf_dir)
+        .collect()
+    }
+    inc_corpus = {k: v for k, v in inc.items() if max(k) < 2_000_000_000}
+    one_shot = {
+        (r.a_id, r.b_id): r.jaccard
+        for r in plans.get("dedup_minhash_certified").fn(spark, sf_dir).collect()
+    }
+    assert inc_corpus == _cross_split_restriction(one_shot)
+    # the crafted cross-split near-dup fires on the certified arithmetic
+    assert 0.5 < inc[(2_000_000_008, 2_000_000_000)] < 1.0
+    assert not any(b == 2_000_000_018 for b, _ in inc)
+
+
 def test_incremental_simhash_certified_equals_certified_oneshot_cross_split(
     spark, sf_dir
 ):
